@@ -8,8 +8,13 @@ live in sources/readers.py behind import-tries.
 
 from __future__ import annotations
 
+import os
+import stat
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -68,6 +73,64 @@ def clear_bucketed_tables() -> None:
     _BUCKETED.clear()
 
 
+# Parquet schema memo: every spark.read.parquet without a schema
+# launches a schema-inference Spark job (one footer read, but a whole
+# job's scheduling overhead). A detector sweep loads the same few
+# tables dozens of times, so the inferred StructType is reused through
+# spark.read.schema(...). One entry per path, stamped with the
+# (mtime_ns, size) of every file under it and the inference confs load
+# does not pin, so a rewritten file or a changed conf infers again.
+# Data is still read fresh on every call; only the schema is reused.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.caseSensitive",
+)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_signature(path: str) -> tuple | None:
+    """(mtime_ns, size) of the file at ``path``, or of every file under
+    it when it is a directory; None for paths os.stat cannot see
+    (gs://, s3a://, file: URIs) or that do not exist."""
+    if urlsplit(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:
+                return None
+            sig.append((os.path.relpath(full, path), fst.st_mtime_ns,
+                        fst.st_size))
+    return tuple(sorted(sig))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    stamp = (sig, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    memo = _SCHEMAS.get(path)
+    if memo is not None and memo[0] == stamp:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one catalog table. Parquet scan → column pruning and
     predicate pushdown come free from whatever the caller selects."""
@@ -82,7 +145,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # against the UTC-naive DuckDB oracle.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{table}.parquet")
     # Normalize the event-time column to session-tz TIMESTAMP no matter
     # which vintage of the driver testdata we read:
     #   - TIMESTAMP(NANOS) parquet arrives as long under nanosAsLong;

@@ -12,10 +12,12 @@ retry.
 from __future__ import annotations
 
 import os
-
+from collections.abc import Iterable
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from selfhealingdatapipeline_gcp_spark import catalog, registry
@@ -23,6 +25,54 @@ from selfhealingdatapipeline_gcp_spark.operators import analytics, quality
 from selfhealingdatapipeline_gcp_spark.plans import alerts
 from selfhealingdatapipeline_gcp_spark.plans.pipeline import Pipeline, Task
 from selfhealingdatapipeline_gcp_spark.sources import writers
+
+
+def evaluate_detectors(spark: SparkSession, sf_dir: str,
+                       names: Iterable[str]) -> dict[str, DataFrame]:
+    """Build the named detectors and materialize every output exactly
+    once, concurrently.
+
+    Plans are built on the calling thread (builders are cheap and
+    callers may trace them). The detectors are independent and mostly
+    single-task stages, so run one after another they leave the
+    executors idle behind the driver's per-job overhead; here each
+    output is ``localCheckpoint``-ed on a pool sized to the session's
+    default parallelism, and every pool thread inherits the caller's
+    job group and local properties. Downstream consumers (alert
+    collection, the daily report, the baseline snapshot) then read the
+    materialized rows instead of re-running the detector plans.
+
+    A failing detector raises here, so the calling pipeline task heals
+    and retries as for any other failure; outputs already materialized
+    are released first. Release the returned outputs with
+    ``release_outputs`` when done."""
+    qs = registry.queries()
+    plans = {n: qs[n](spark, sf_dir) for n in names}
+    done: list[DataFrame] = []
+
+    def materialize(df: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=True)
+        done.append(out)
+        return out
+
+    target = inheritable_thread_target(spark)(materialize)
+    n_threads = max(1, min(len(plans), spark.sparkContext.defaultParallelism))
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            outs = list(pool.map(target, plans.values()))
+    except BaseException:
+        release_outputs(done)
+        raise
+    return dict(zip(plans, outs))
+
+
+def release_outputs(outputs: Iterable[DataFrame]) -> None:
+    """Drop the blocks behind ``localCheckpoint``-ed DataFrames. A local
+    checkpoint persists its RDD and nothing unpersists it, so a
+    recurring sweep would otherwise pile up one cached RDD per
+    detector per tick."""
+    for df in outputs:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def run_etl_job(spark: SparkSession, sf_dir: str, output_path: str,
@@ -54,14 +104,13 @@ def run_etl_job(spark: SparkSession, sf_dir: str, output_path: str,
         return output_path
 
     def monitoring(s: SparkSession, ctx: dict[str, Any]):
-        qs = registry.queries()
-        outputs = {
-            "revenue_anomaly": qs["revenue_anomaly"](s, sf_dir),
-            "transaction_volume_anomaly":
-                qs["transaction_volume_anomaly"](s, sf_dir),
-            "freshness_check": qs["freshness_check"](s, sf_dir),
-        }
-        return alerts.collect_alerts(outputs).collect()
+        outputs = evaluate_detectors(s, sf_dir, (
+            "revenue_anomaly", "transaction_volume_anomaly",
+            "freshness_check"))
+        try:
+            return alerts.collect_alerts(outputs).collect()
+        finally:
+            release_outputs(outputs.values())
 
     pipe = Pipeline("etl_orders", [
         Task("transform", transform, validate=quality_gate),
@@ -140,8 +189,7 @@ def run_monitoring_sweep(spark: SparkSession, sf_dir: str,
     )
 
     def run_detectors(s: SparkSession, ctx: dict[str, Any]):
-        qs = registry.queries()
-        return {n: qs[n](s, sf_dir) for n in detector_names}
+        return evaluate_detectors(s, sf_dir, detector_names)
 
     def send_alerts(s: SparkSession, ctx: dict[str, Any]):
         from selfhealingdatapipeline_gcp_spark.plans import history as hist
@@ -160,18 +208,22 @@ def run_monitoring_sweep(spark: SparkSession, sf_dir: str,
             stream = alerts.dedup_against_history(stream, past, anchor)
         sender = (alerts.FileAlertSender(alert_dir)
                   if alert_dir is not None else alerts.AlertSender())
-        if state_root is not None:
-            # materialize once: the same rows are delivered AND
-            # appended to the audit sink
-            stream = stream.localCheckpoint(eager=True)
-        n_delivered = sender.deliver(stream)
-        if state_root is not None:
+        if state_root is None:
+            return {"n_delivered": sender.deliver(stream),
+                    "audit": sender.sent}
+        # materialize once: the same rows are delivered AND appended
+        # to the audit sink
+        stream = stream.localCheckpoint(eager=True)
+        try:
+            n_delivered = sender.deliver(stream)
             hist.write_alert_history(stream, state_root, anchor)
-            hist.write_baseline_metrics(
-                hist.baseline_metrics_from(ctx["detectors"]["revenue_anomaly"]
-                                           .select("d", "revenue"),
-                                           anchor),
-                state_root)
+        finally:
+            release_outputs((stream,))
+        hist.write_baseline_metrics(
+            hist.baseline_metrics_from(ctx["detectors"]["revenue_anomaly"]
+                                       .select("d", "revenue"),
+                                       anchor),
+            state_root)
         return {"n_delivered": n_delivered, "audit": sender.sent}
 
     def daily_report(s: SparkSession, ctx: dict[str, Any]):
@@ -192,6 +244,8 @@ def run_monitoring_sweep(spark: SparkSession, sf_dir: str,
              depends_on=("detectors", "send_alerts")),
     ])
     results = pipe.run(spark)
+    if results["detectors"].status == "SUCCESS":
+        release_outputs(results["detectors"].result.values())
     return {
         "statuses": {k: v.status for k, v in results.items()},
         "report": results["daily_report"].result,

@@ -118,7 +118,11 @@ def _fix_broadcast(m: re.Match[str]) -> Fix:
     )
 
 
-@_rule("shuffle_fetch", r"FetchFailed|shuffle.*(?:fetch|lost)|ExecutorLostFailure")
+# ``shuffle`` and ``fetch``/``lost`` must share a line: under DOTALL a
+# ``Submitting ShuffleMapStage`` INFO line followed by any later ``Lost
+# task`` line would otherwise claim every failure of a shuffle stage.
+@_rule("shuffle_fetch", r"FetchFailed|MetadataFetchFailed|ExecutorLostFailure|"
+       r"Missing an output location for shuffle|shuffle[^\n]*(?:fetch|lost)")
 def _fix_shuffle(m: re.Match[str]) -> Fix:
     return Fix(
         fix_type="RETRY",
@@ -211,7 +215,12 @@ def _fix_overflow(m: re.Match[str]) -> Fix:
     )
 
 
-@_rule("permission", r"Permission denied|AccessDenied|403")
+# Only HTTP-status-shaped 403s: a bare ``403`` also turns up in line
+# numbers (``NioSocketImpl.java:403)``), block ids (``broadcast_403``),
+# task ids and UUIDs, and would turn transient failures into MANUAL ones.
+@_rule("permission", r"Permission denied|AccessDenied|\b403\s+Forbidden|"
+       r"\bHTTP(?:/[\d.]+)?\s+403\b|\bstatus(?:\s*code)?\s*[:=]\s*403\b|"
+       r"\bError\s+403\b")
 def _fix_permission(m: re.Match[str]) -> Fix:
     return Fix(
         fix_type="MANUAL",

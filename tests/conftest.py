@@ -91,3 +91,24 @@ def assert_parity(spark_df, duck_con, sql, float_places=6):
          for r in duck_rows), key=_key)
     for i, (a, b) in enumerate(zip(s_set, d_set)):
         assert a == b, f"row {i} differs:\n  spark={a}\n  duck ={b}"
+
+
+def marker_job(spark, name: str) -> int:
+    """Run a one-task job in job group ``name`` and return its job id
+    once Spark's status store lists it. The store is fed asynchronously
+    but in submission order, so by then every job submitted before the
+    marker is visible too; the jobs a block of code launched are the
+    ids strictly between a marker before it and a marker after it."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 60
+    while not sc.statusTracker().getJobIdsForGroup(name):
+        assert time.monotonic() < deadline, f"marker job {name} never listed"
+        time.sleep(0.05)
+    return max(sc.statusTracker().getJobIdsForGroup(name))

@@ -488,6 +488,64 @@ def test_analyze_error_extended_rules(log, expected_type, kw):
     assert kw.lower() in (fix.root_cause + fix.suggested_fix).lower()
 
 
+TRANSIENT = "java.net.SocketException: Connection reset by peer"
+
+
+@pytest.mark.parametrize("log", [
+    f"{TRANSIENT}\n\tat sun.nio.ch.NioSocketImpl.implRead"
+    "(NioSocketImpl.java:403)",
+    "INFO MemoryStore: Block broadcast_403 stored as values in memory\n"
+    + TRANSIENT,
+    "INFO Executor: Running task 3.0 in stage 12.0 (TID 1403)\n" + TRANSIENT,
+    "ERROR FileFormatWriter: Aborting job "
+    f"5c1e8a2f-403b-4c4d-9e7a-0b1c2d3e4f50.\n{TRANSIENT}",
+])
+def test_bare_403_is_not_a_permission_error(log):
+    """A 403 inside a line number, block id, task id or UUID is noise:
+    the transient failure must stay retryable, not turn MANUAL."""
+    fix = healer.analyze_error(log)
+    assert fix.root_cause == "unclassified failure"
+    assert fix.retryable
+
+
+@pytest.mark.parametrize("log", [
+    "HttpResponseException: 403 Forbidden\nGET https://storage/b/o",
+    "java.io.IOException: Server returned HTTP 403 for gs://bucket/x",
+    "HTTP/1.1 403 Forbidden",
+    "AmazonS3Exception: Access Denied (Service: Amazon S3; Status Code: 403)",
+    "GoogleJsonResponseException: statusCode: 403",
+    "com.google.cloud.storage.StorageException: Error 403: caller does "
+    "not have storage.objects.get access",
+])
+def test_http_403_is_a_permission_error(log):
+    fix = healer.analyze_error(log)
+    assert fix.fix_type == "MANUAL"
+    assert "permission" in fix.root_cause
+    assert not fix.retryable
+
+
+def test_shuffle_stage_then_lost_task_is_not_a_fetch_failure():
+    """A shuffle stage submission followed by a later ``Lost task`` line
+    is not a fetch failure: the real cause here is a connection reset."""
+    log = ("26/10/17 11:02:07 INFO DAGScheduler: Submitting ShuffleMapStage 3 "
+           "(MapPartitionsRDD[12] at parquet at "
+           "NativeMethodAccessorImpl.java:0), which has no missing parents\n"
+           "26/10/17 11:02:09 WARN TaskSetManager: Lost task 1.0 in stage "
+           f"3.0 (TID 17) (localhost executor driver): {TRANSIENT}")
+    assert healer.analyze_error(log).root_cause == "unclassified failure"
+
+
+@pytest.mark.parametrize("log", [
+    "org.apache.spark.shuffle.MetadataFetchFailedException: Missing an "
+    "output location for shuffle 3 partition 0",
+    "ExecutorLostFailure (executor 2 exited caused by one of the running "
+    "tasks) Reason: Container marked as failed",
+    "WARN BlockManager: shuffle block fetch failed for shuffle_3_12_0",
+])
+def test_shuffle_fetch_rule_still_matches(log):
+    assert "shuffle fetch" in healer.analyze_error(log).root_cause
+
+
 def test_file_alert_sender_lands_per_severity(spark, tmp_path):
     """E2E file transport (VERDICT r3 #6): routed alerts land in
     per-channel jsonl files according to the severity ladder."""
@@ -1048,3 +1106,157 @@ def test_scheduled_sweep_delivers_recommendations_once(spark, tmp_path):
     # 3 ticks, zero duplicate deliveries: every routed line is unique
     assert len(seen) == len(set(seen))
     assert len({(d, k) for d, k, _ in seen}) == n_first
+
+
+SWEEP_DETECTORS = 16
+
+
+def _count_builds(monkeypatch):
+    """Count calls per registered builder from here on."""
+    import collections
+
+    from selfhealingdatapipeline_gcp_spark import registry
+
+    calls = collections.Counter()
+    orig = registry.queries
+
+    def counted(name, build):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return build(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(registry, "queries", lambda: {
+        n: counted(n, b) for n, b in orig().items()})
+    return calls
+
+
+def _record_tasks(monkeypatch):
+    """Record every TaskResult and keep the running task's name in
+    ``current["task"]``."""
+    current = {"task": None}
+    results = []
+    orig = Pipeline._run_task
+
+    def run_task(self, spark, task, context):
+        outer, current["task"] = current["task"], task.name
+        try:
+            res = orig(self, spark, task, context)
+        finally:
+            current["task"] = outer
+        results.append(res)
+        return res
+
+    monkeypatch.setattr(Pipeline, "_run_task", run_task)
+    return current, results
+
+
+def test_sweep_builds_and_runs_each_detector_once(spark, tmp_path,
+                                                   monkeypatch):
+    """Every detector is built once per sweep, and the daily report
+    reads the materialized outputs, not the parquet tables."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    calls = _count_builds(monkeypatch)
+    current, _ = _record_tasks(monkeypatch)
+    df_cls = type(spark.range(1))
+    orig_collect = df_cls.collect
+    report_plans = []
+
+    def collect(self):
+        rows = orig_collect(self)
+        if current["task"] == "daily_report":
+            report_plans.append(
+                self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", collect)
+    out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
+                                    state_root=str(tmp_path / "state"))
+    assert all(v == "SUCCESS" for v in out["statuses"].values())
+    assert len(out["report"]) == SWEEP_DETECTORS
+    assert len(calls) == SWEEP_DETECTORS
+    assert set(calls.values()) == {1}, calls
+    assert report_plans
+    assert not any("FileScan" in p for p in report_plans), report_plans
+
+
+def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
+    """A detector whose materialization fails on a pool thread fails the
+    detectors task, which heals and succeeds on its second attempt."""
+    import threading
+
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs, registry
+
+    orig = registry.queries
+    failed_on = []
+
+    def queries():
+        qs = orig()
+        build = qs["feed_status"]
+
+        def flaky(s, sf_dir):
+            df = build(s, sf_dir)
+            if not failed_on:
+                def fail(*args, **kwargs):
+                    failed_on.append(threading.current_thread())
+                    raise RuntimeError(
+                        "org.apache.spark.shuffle.FetchFailedException: "
+                        "Failed to connect to localhost/127.0.0.1:41234")
+                df.localCheckpoint = fail
+            return df
+        qs["feed_status"] = flaky
+        return qs
+
+    monkeypatch.setattr(registry, "queries", queries)
+    _, results = _record_tasks(monkeypatch)
+    out = jobs.run_monitoring_sweep(spark, SF_SMOKE)
+    assert out["statuses"] == {"detectors": "SUCCESS",
+                               "send_alerts": "SUCCESS",
+                               "daily_report": "SUCCESS"}
+    assert len(failed_on) == 1
+    assert failed_on[0] is not threading.main_thread()
+    det = next(r for r in results if r.name == "detectors")
+    assert det.attempts == 2
+    assert det.fixes[0]["fix_type"] == "RETRY"
+    assert "shuffle fetch" in det.fixes[0]["root_cause"]
+
+
+def test_sweep_jobs_inherit_callers_job_group(spark, tmp_path):
+    """Jobs launched on the detector pool's threads carry the caller's
+    job group like the ones launched on the calling thread."""
+    from conftest import SF_SMOKE, marker_job
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    sc = spark.sparkContext
+    first = marker_job(spark, "sweep-group-before")
+    sc.setJobGroup("g", "monitoring sweep under a caller's job group")
+    try:
+        out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
+                                        state_root=str(tmp_path / "state"))
+    finally:
+        sc._jsc.clearJobGroup()
+    last = marker_job(spark, "sweep-group-after")
+    assert all(v == "SUCCESS" for v in out["statuses"].values())
+    launched = set(range(first + 1, last))
+    assert len(launched) > SWEEP_DETECTORS
+    in_group = set(sc.statusTracker().getJobIdsForGroup("g"))
+    assert launched <= in_group, sorted(launched - in_group)
+
+
+def test_scheduled_sweeps_release_checkpoints(spark, tmp_path):
+    """Materialized detector outputs and alert streams are unpersisted
+    when each sweep returns, so recurring ticks do not pile up cached
+    RDDs."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    outs = jobs.run_scheduled_sweeps(
+        spark, SF_SMOKE, str(tmp_path / "state"), interval_s=0,
+        max_runs=3, sleep=lambda s: None)
+    assert [all(v == "SUCCESS" for v in o["statuses"].values())
+            for o in outs] == [True] * 3
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

@@ -246,3 +246,58 @@ def test_synthetic_docs_stream_source(spark, tmp_path):
     # offsets advanced without gaps or overlaps
     ids = sorted(r.doc_id for r in got.collect())
     assert ids == list(range(len(ids)))
+
+
+def _jobs_launched(spark, name, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    from conftest import marker_job
+    before = marker_job(spark, f"{name}-before")
+    out = fn()
+    return out, marker_job(spark, f"{name}-after") - before - 1
+
+
+def test_catalog_load_reuses_inferred_schema(spark, tmp_path):
+    """The first load of a table infers its parquet schema (a Spark
+    job); a second load reuses it and launches no job, while the data
+    is still read from the file."""
+    import shutil
+    shutil.copyfile(f"{SF_SMOKE}/supplier.parquet",
+                    tmp_path / "supplier.parquet")
+    sf_dir = str(tmp_path)
+
+    cold, n_cold = _jobs_launched(
+        spark, "memo-cold", lambda: catalog.load(spark, sf_dir, "supplier"))
+    warm, n_warm = _jobs_launched(
+        spark, "memo-warm", lambda: catalog.load(spark, sf_dir, "supplier"))
+    assert n_cold >= 1
+    assert n_warm == 0
+    assert warm.schema == cold.schema
+    assert warm.count() == cold.count() > 0
+
+
+def test_catalog_load_sees_rewritten_file(spark, tmp_path):
+    """Rewriting a table file in place (same path, one more column)
+    invalidates the memoized schema."""
+    import shutil
+
+    import duckdb
+    path = tmp_path / "nation.parquet"
+    shutil.copyfile(f"{SF_SMOKE}/nation.parquet", path)
+    first = catalog.load(spark, str(tmp_path), "nation")
+    assert "extra" not in first.columns
+
+    with duckdb.connect() as con:
+        con.execute(f"COPY (SELECT *, n_nationkey * 10 AS extra FROM "
+                    f"'{SF_SMOKE}/nation.parquet') TO '{path}' "
+                    "(FORMAT PARQUET)")
+    again = catalog.load(spark, str(tmp_path), "nation")
+    assert again.columns == first.columns + ["extra"]
+    assert again.agg(F.sum("extra")).collect()[0][0] == 10 * sum(range(25))
+
+
+def test_catalog_load_file_uri(spark):
+    """A ``file://`` URI catalog root still loads (no schema memo for
+    paths os.stat cannot see)."""
+    df = catalog.load(spark, f"file://{SF_SMOKE}", "nation")
+    assert df.count() == 25
+    assert catalog.load(spark, f"file://{SF_SMOKE}", "nation").count() == 25

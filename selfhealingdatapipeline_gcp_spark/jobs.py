@@ -125,34 +125,6 @@ def run_etl_job(spark: SparkSession, sf_dir: str, output_path: str,
     }
 
 
-def main() -> None:
-    """CLI mirror of the reference job submission
-    (scripts/transform_script:28-35 argparse → run_job): spark-submit
-    this module on a cluster, or run it directly in local mode."""
-    import argparse
-    import json
-
-    from selfhealingdatapipeline_gcp_spark.session import get_spark
-
-    parser = argparse.ArgumentParser(description="self-healing ETL job")
-    parser.add_argument("--sf-dir", default="/root/testdata/sf0.001",
-                        help="input table directory (parquet catalog)")
-    parser.add_argument("--output", required=True,
-                        help="output path for the enriched orders sink")
-    args = parser.parse_args()
-
-    spark = get_spark("shdp-etl-job")
-    result = run_etl_job(spark, args.sf_dir, args.output)
-    print(json.dumps({
-        "statuses": result["statuses"],
-        "n_alerts": len(result["alerts"] or []),
-    }))
-
-
-if __name__ == "__main__":
-    main()
-
-
 def run_monitoring_sweep(spark: SparkSession, sf_dir: str,
                          history=None,
                          state_root: str | None = None,
@@ -285,9 +257,6 @@ def run_scheduled_sweeps(spark: SparkSession, sf_dir: str,
     baseline rows and re-deliver alerts."""
     import time as _time
 
-    from selfhealingdatapipeline_gcp_spark.plans.pipeline import (
-        Pipeline as _P, Task as _T)
-
     outputs: list[dict[str, Any]] = []
 
     def sweep(s: SparkSession, ctx: dict[str, Any]):
@@ -311,8 +280,8 @@ def run_scheduled_sweeps(spark: SparkSession, sf_dir: str,
             raise RuntimeError(f"sweep tasks failed: {failed}")
         return out
 
-    pipe = _P("scheduled_monitoring",
-              [_T("sweep", sweep, max_retries=0)])
+    pipe = Pipeline("scheduled_monitoring",
+                    [Task("sweep", sweep, max_retries=0)])
     pipe.run_every(spark, interval_s, max_runs=max_runs,
                    sleep=sleep if sleep is not None else _time.sleep)
     return outputs
@@ -449,3 +418,31 @@ def run_curation_job(spark: SparkSession, sf_dir: str, output_path: str,
     if "n_rule_admitted" in state:
         out["n_rule_admitted"] = state["n_rule_admitted"]
     return out
+
+
+def main() -> None:
+    """CLI mirror of the reference job submission
+    (scripts/transform_script:28-35 argparse → run_job): spark-submit
+    this module on a cluster, or run it directly in local mode."""
+    import argparse
+    import json
+
+    from selfhealingdatapipeline_gcp_spark.session import get_spark
+
+    parser = argparse.ArgumentParser(description="self-healing ETL job")
+    parser.add_argument("--sf-dir", default="/root/testdata/sf0.001",
+                        help="input table directory (parquet catalog)")
+    parser.add_argument("--output", required=True,
+                        help="output path for the enriched orders sink")
+    args = parser.parse_args()
+
+    spark = get_spark("shdp-etl-job")
+    result = run_etl_job(spark, args.sf_dir, args.output)
+    print(json.dumps({
+        "statuses": result["statuses"],
+        "n_alerts": len(result["alerts"] or []),
+    }))
+
+
+if __name__ == "__main__":
+    main()

@@ -103,12 +103,12 @@ def _shingle_rows(documents: DataFrame,
     Built with posexplode + windowed lead() instead of array
     expressions: higher-order array functions are interpreted
     (no whole-stage codegen), while split+explode+window+concat all
-    stay inside codegen. Re-measured on Spark 4.1 (r10,
-    tools/hof_shingle_probe3.py, interleaved min-of-5 at the sf1
-    replica): a fused transform+md5 array build is ~4x slower than
-    this form at the distinct-(doc_id,h) stage (2.2s vs 0.6s) and
-    ~1.4x slower through the full pair pipeline — the per-element
-    interpreted lambda costs more than the window sort it removes.
+    stay inside codegen. Re-measured on Spark 4.1 (r10, interleaved
+    min-of-5 at the sf1 replica): a fused transform+md5 array build
+    is ~4x slower than this form at the distinct-(doc_id,h) stage
+    (2.2s vs 0.6s) and ~1.4x slower through the full pair pipeline —
+    the per-element interpreted lambda costs more than the window
+    sort it removes.
     The window shuffle is on doc_id — the same key every downstream
     agg needs (the _spread exchange serves both).
     """
@@ -1653,8 +1653,8 @@ def dedup_threshold_sweep(documents: DataFrame,
     construction lazy."""
     spark = documents.sparkSession
     if edges is None:
-        # Materialize the verified pairs ONCE (eager, builder-time —
-        # the query is in bench BUILD_EXECUTES for it): the sweep
+        # Materialize the verified pairs ONCE (eager, builder-time,
+        # so building the query runs this job): the sweep
         # consumes the relation at TWO grains (pair buckets and
         # per-doc max buckets), and exchange reuse alone leaves the
         # a-side shingle-set aggregation executing twice — it sits
@@ -1727,7 +1727,7 @@ def dedup_cascade_report(documents: DataFrame,
     and the checkpointed sets are lost on executor failure (local,
     non-reliable storage)."""
     # The keeper-id sets are eagerly checkpointed (builder-time; the
-    # query is in bench BUILD_EXECUTES already for its CC loop):
+    # builder already runs jobs for its CC loop):
     # without this, the exact-dedup md5 groupBy evaluates THREE times
     # (the LSH edge build over d2, c1, c2) and the normalized groupBy
     # twice — each a full corpus aggregation pass. The sets are

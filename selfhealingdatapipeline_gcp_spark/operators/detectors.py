@@ -1526,7 +1526,10 @@ def detector_incident_rollup(orders: DataFrame,
     flagged rows and projected to the shared schema. Legs union
     barrier-free; each is a bounded day-grain relation. MAD carries
     no comparable score — its score is NULL by design rather than a
-    fabricated pseudo-z."""
+    fabricated pseudo-z. Rows come back in (d, detector) order: the
+    rollup is a report read top-down, day by day, so its order is
+    part of the contract (one sort Exchange over the bounded
+    incident rows)."""
     legs = [
         (revenue_anomaly(orders).filter(F.col("is_anomaly"))
          .select(F.col("d"), F.lit("revenue_z").alias("detector"),
@@ -1549,4 +1552,4 @@ def detector_incident_rollup(orders: DataFrame,
     out = legs[0]
     for leg in legs[1:]:
         out = out.unionByName(leg)
-    return out
+    return out.orderBy("d", "detector")

@@ -827,12 +827,12 @@ def catalog_stats_report(tables: dict[str, DataFrame]) -> DataFrame:
     no barrier — deliberately NOT one wide multi-countDistinct pass
     per table: Spark plans N distinct aggregates in one agg via
     EXPAND (row count × N before the shuffle), which made the wide
-    form the single slowest bench query (8.6 s at sf0.1, dominated by
+    form the single slowest headline query (8.6 s at sf0.1, dominated by
     the 5-distinct lineitem leg). Per-column legs each scan exactly
     one parquet column (pruned ReadSchema) with a two-phase single
     distinct — the shape ANALYZE itself uses. Honest numbers: at
     sf0.1 this reads 7.4 s vs the wide form's 8.6 (BOTH are
-    scheduling-overhead-bound at bench SF — 34 legs × 2 stages); the
+    scheduling-overhead-bound at sf0.1 — 34 legs × 2 stages); the
     form is chosen for 100 TB, where EXPAND's row × column-count
     multiplication into the partial aggregates is the term that
     matters and per-column pruned scans are the standard shape. NDV is

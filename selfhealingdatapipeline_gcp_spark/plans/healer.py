@@ -53,13 +53,17 @@ _ENGINE_PATCHES: dict[str, Callable[[], None]] = {
 
 
 # Rule table: (name, pattern on the error text, fix builder).
-# Patterns target real Spark exception signatures.
+# Patterns target real Spark exception signatures. ``.`` does not
+# cross a newline, so every pattern matches within one log line: two
+# words from unrelated lines never combine into a match, and a search
+# never rescans to the end of the log from each candidate start, so
+# classification stays linear in the log size.
 _RULES: list[tuple[str, re.Pattern[str], Callable[[re.Match[str]], Fix]]] = []
 
 
 def _rule(name: str, pattern: str):
     def deco(fn: Callable[[re.Match[str]], Fix]):
-        _RULES.append((name, re.compile(pattern, re.IGNORECASE | re.DOTALL), fn))
+        _RULES.append((name, re.compile(pattern, re.IGNORECASE), fn))
         return fn
     return deco
 
@@ -108,7 +112,8 @@ def _fix_oom(m: re.Match[str]) -> Fix:
     )
 
 
-@_rule("broadcast_oom", r"Cannot broadcast|broadcast.*(?:8GB|too large)|BroadcastJoin.*(?:memory|timeout)")
+@_rule("broadcast_oom", r"Cannot broadcast|Could not execute broadcast|"
+       r"broadcast.*(?:8GB|too large)|BroadcastJoin.*(?:memory|timeout)")
 def _fix_broadcast(m: re.Match[str]) -> Fix:
     return Fix(
         fix_type="CONFIG",
@@ -118,11 +123,8 @@ def _fix_broadcast(m: re.Match[str]) -> Fix:
     )
 
 
-# ``shuffle`` and ``fetch``/``lost`` must share a line: under DOTALL a
-# ``Submitting ShuffleMapStage`` INFO line followed by any later ``Lost
-# task`` line would otherwise claim every failure of a shuffle stage.
 @_rule("shuffle_fetch", r"FetchFailed|MetadataFetchFailed|ExecutorLostFailure|"
-       r"Missing an output location for shuffle|shuffle[^\n]*(?:fetch|lost)")
+       r"Missing an output location for shuffle|shuffle.*(?:fetch|lost)")
 def _fix_shuffle(m: re.Match[str]) -> Fix:
     return Fix(
         fix_type="RETRY",

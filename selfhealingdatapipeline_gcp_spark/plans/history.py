@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,15 +48,25 @@ def write_alert_history(alerts: DataFrame, root: str, sent_ts) -> None:
                           mode="append", partition_by=("sent_date",))
 
 
+# the read errors that mean "nothing persisted yet", not "unreadable"
+_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def read_alert_history(spark: SparkSession, root: str) -> DataFrame:
     """Alert history in dedup_against_history's shape
     (detector, alert_key, sent_ts); empty relation when no run has
-    persisted yet — first sweep suppresses nothing."""
+    persisted a history file yet — the path is missing, or a sweep
+    that delivered nothing left only ``_SUCCESS`` there — so the first
+    sweep suppresses nothing. Any other read failure (a corrupt file,
+    a denied path) raises: an empty history would re-deliver every
+    alert instead of surfacing the error."""
     path = os.path.join(root, ALERTS_SUBDIR)
     try:
         return spark.read.parquet(path).select(
             "detector", "alert_key", "sent_ts")
-    except Exception:
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NO_HISTORY:
+            raise
         return spark.createDataFrame([], T.StructType([
             _HISTORY_SCHEMA["detector"],
             _HISTORY_SCHEMA["alert_key"],

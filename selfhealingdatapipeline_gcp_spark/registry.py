@@ -31,8 +31,8 @@ class Entry:
 
 _REGISTRY: dict[str, Entry] = {}
 
-#: the bench headline core — the 19 r1 queries every round's floor is
-#: pinned to (bench.py imports this; one source of truth)
+#: the headline core — the 19 r1 queries every round's floor was
+#: pinned to (tier="flagship"; one source of truth)
 FLAGSHIP = (
     "q1_pricing_summary", "q3_shipping_priority", "q5_regional_revenue",
     "q10_returned_items", "revenue_anomaly", "transaction_volume_anomaly",
@@ -44,15 +44,12 @@ FLAGSHIP = (
     "embedding_centroids",
 )
 
-#: the rest of the bench headline set (the per-round perf floor in
-#: BENCH_r*.json). A query EARNS headline tier when it is its
-#: family's scale-path representative: the form you would actually
-#: run at 100 TB (broadcast/bucket/cell-bounded variants, not the
-#: exact diagnostic twins), with a pinned oracle and a recorded
-#: per-round floor. Names here resolve to tier="headline" at
-#: registration; bench.py derives its query set from this metadata
-#: (registry.headline_names()) instead of a hand-maintained list,
-#: so registering a query with the tier IS adding it to the bench.
+#: the rest of the headline set. A query EARNS headline tier when
+#: it is its family's scale-path representative: the form you would
+#: actually run at 100 TB (broadcast/bucket/cell-bounded variants,
+#: not the exact diagnostic twins), with a pinned oracle. Names here
+#: resolve to tier="headline" at registration; ``entries()`` exposes
+#: the tier, so selecting over it needs no hand-maintained list.
 HEADLINE = (
     "dedup_embedding_cells", "contamination_check",
     "quality_filter_pipeline", "vector_quantize", "multimodal_features",
@@ -107,8 +104,8 @@ HEADLINE = (
 )
 
 #: valid tiers: flagship = the pinned 19-query r1 core (the
-#: cross-round comparable floor); headline = benched per-round;
-#: standard = the default (verified, not benched); diagnostic =
+#: cross-round comparable floor); headline = each family's scale-path
+#: representative; standard = the default (verified); diagnostic =
 #: small-scale exact forms with a registered scale alternative
 #: (kept for verification, not for 100 TB runs)
 TIERS = ("flagship", "headline", "standard", "diagnostic")
@@ -186,20 +183,10 @@ def oracle_sql() -> dict[str, str]:
 
 def entries() -> dict[str, Entry]:
     """The full registry with metadata (family/tier/oracle presence) —
-    what the bench headline set and any principled driver sampling
-    should select over, instead of positional name lists."""
+    what any principled driver sampling should select over, instead
+    of positional name lists."""
     _ensure_loaded()
     return dict(_REGISTRY)
-
-
-def headline_names() -> list[str]:
-    """Bench set, derived from tier metadata in registration order —
-    flagship (the pinned cross-round core) + headline (each family's
-    scale-path representative). bench.py consumes this; the driver's
-    sampling tooling can too."""
-    _ensure_loaded()
-    return [n for n, e in _REGISTRY.items()
-            if e.tier in ("flagship", "headline")]
 
 
 def queries_by_family() -> dict[str, list[str]]:
@@ -384,7 +371,7 @@ def _ensure_loaded() -> None:
     from selfhealingdatapipeline_gcp_spark import registry_curation  # noqa: F401
     # tier metadata must not go stale: every name in the FLAGSHIP /
     # HEADLINE sets has to resolve to a real registration (a typo or
-    # a renamed query would silently shrink the bench otherwise)
+    # a renamed query would silently shrink the tier otherwise)
     missing = [n for n in (*FLAGSHIP, *HEADLINE) if n not in _REGISTRY]
     if missing:
         raise RuntimeError(

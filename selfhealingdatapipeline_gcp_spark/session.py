@@ -86,9 +86,9 @@ def get_spark(app_name: str = "selfhealingdatapipeline_gcp_spark",
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1"
                 else "false")
         # Console progress bars write \r-spam to stderr/stdout that
-        # buries the bench's machine-readable JSON tail (BENCH_r06
-        # came back parsed:null because the driver's tail capture
-        # filled with progress frames). Nothing here is interactive.
+        # buries machine-readable output (a bounded tail capture once
+        # filled with progress frames and parsed nothing). Nothing
+        # here is interactive.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
@@ -144,7 +144,7 @@ def get_spark(app_name: str = "selfhealingdatapipeline_gcp_spark",
         # Day-grain detectors deliberately use single-partition windows
         # over O(days) relations (annotated at each site); WindowExec's
         # "No Partition Defined" warning would fire on every run and
-        # bury real regressions in the bench tail — silence just that
+        # bury real regressions in the log tail — silence just that
         # logger, nothing else.
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -25,12 +25,12 @@ def test_wheel_builds_and_is_valid(tmp_path):
         assert "Name: selfhealingdatapipeline-gcp-spark" in meta
         assert "Requires-Dist: pyspark>=4.0" in meta
         eps = zf.read(f"{dist_info}/entry_points.txt").decode()
-        assert "shdp-bench = bench:main" in eps
+        assert "shdp-driver-check = tools.driver_check:cli" in eps
+        assert "shdp-bench" not in eps
         # every payload file is in RECORD with a sha256
         record = zf.read(f"{dist_info}/RECORD").decode()
         recorded = {row[0] for row in csv.reader(io.StringIO(record))}
         assert set(names) == recorded
-        # the library and both entry modules ship
+        # the library and the driver-check entry module ship
         assert "selfhealingdatapipeline_gcp_spark/registry.py" in names
-        assert "bench.py" in names
         assert "tools/driver_check.py" in names

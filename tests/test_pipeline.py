@@ -5,6 +5,7 @@ tests/test_pipeline.py, widened to the full rule table)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +26,13 @@ from selfhealingdatapipeline_gcp_spark.plans.pipeline import Pipeline, Task
      "RETRY", "transient"),
     ("SparkException: Cannot broadcast the table that is larger than 8GB",
      "CONFIG", "broadcast"),
+    # the broadcast-timeout line names neither a size nor a BroadcastJoin
+    # timeout
+    ("org.apache.spark.SparkException: Could not execute broadcast in 300 "
+     "secs. You can increase the timeout for broadcasts via "
+     "spark.sql.broadcastTimeout or disable broadcast join by setting "
+     "spark.sql.autoBroadcastJoinThreshold to -1 or remove the broadcast "
+     "hint if it exists in your code.", "CONFIG", "broadcast"),
     ("Caused by: java.nio.file.AccessDeniedException: Permission denied",
      "MANUAL", "permission"),
     ("some totally novel failure mode", "RETRY", "unclassified"),
@@ -469,6 +477,33 @@ def test_read_alert_history_empty_when_absent(spark, tmp_path):
     assert set(df.columns) == {"detector", "alert_key", "sent_ts"}
 
 
+def test_read_alert_history_empty_after_a_quiet_sweep(spark, tmp_path):
+    """A sweep that delivered nothing appends an empty relation, which
+    leaves only ``_SUCCESS`` under monitoring_alerts/: still no history."""
+    import datetime
+
+    from selfhealingdatapipeline_gcp_spark.plans import history as hist
+    quiet = spark.createDataFrame(
+        [], "detector string, alert_key string, severity string, "
+            "detail string")
+    hist.write_alert_history(quiet, str(tmp_path),
+                             datetime.datetime(2024, 1, 1))
+    assert hist.read_alert_history(spark, str(tmp_path)).count() == 0
+
+
+def test_read_alert_history_raises_on_corrupt_file(spark, tmp_path):
+    """An unreadable history must fail loudly (and classify as a corrupt
+    file), not read as empty and re-deliver every alert."""
+    from selfhealingdatapipeline_gcp_spark.plans import history as hist
+    alerts_dir = tmp_path / hist.ALERTS_SUBDIR
+    alerts_dir.mkdir()
+    (alerts_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        hist.read_alert_history(spark, str(tmp_path)).collect()
+    fix = healer.analyze_error(str(err.value))
+    assert fix.root_cause == "corrupt/truncated input file in the scan"
+
+
 @pytest.mark.parametrize("log,expected_type,kw", [
     ("java.io.IOException: No space left on device", "CONFIG", "disk"),
     ("com.esotericsoftware.kryo.KryoException: Buffer overflow. Available: 0",
@@ -544,6 +579,19 @@ def test_shuffle_stage_then_lost_task_is_not_a_fetch_failure():
 ])
 def test_shuffle_fetch_rule_still_matches(log):
     assert "shuffle fetch" in healer.analyze_error(log).root_cause
+
+
+def test_classification_time_is_linear_in_log_size():
+    """A 2 MB driver log of broadcast-block INFO lines classifies in
+    seconds; a pattern that may rescan to the end of the log from every
+    ``broadcast`` mention took minutes on it."""
+    line = ("26/10/18 03:49:51 INFO MemoryStore: Block broadcast_17 stored "
+            "as values in memory (estimated size 24.5 KiB, free 2.2 GiB)\n")
+    log = line * (2 * 1024 * 1024 // len(line)) + TRANSIENT
+    t0 = time.perf_counter()
+    fix = healer.analyze_error(log)
+    assert time.perf_counter() - t0 < 30.0
+    assert fix.root_cause == "unclassified failure"
 
 
 def test_file_alert_sender_lands_per_severity(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Registry tier/family metadata (VERDICT r7 #7): 247 flat names now
-carry a family + tier so the bench headline set and any principled
-driver sampling select over structure, not position."""
+carry a family + tier so the headline set and any principled driver
+sampling select over structure, not position."""
 
 from __future__ import annotations
 
@@ -16,10 +16,9 @@ def test_every_entry_has_family_and_tier():
 
 
 def test_flagship_tier_matches_bench_core():
-    import bench
     ents = registry.entries()
     flag = {n for n, e in ents.items() if e.tier == "flagship"}
-    assert flag == set(registry.FLAGSHIP) == set(bench.CORE)
+    assert flag == set(registry.FLAGSHIP)
     assert len(flag) == 19
 
 
@@ -31,37 +30,34 @@ def test_diagnostic_tier_names_have_scale_forms():
     assert diag == {"er_name_pairs", "dedup_embedding"}
     assert "er_name_links" in ents
     assert "dedup_embedding_cells" in ents
-    # both scale forms are benched (headline tier) since r9
+    # both scale forms are headline tier since r9
     assert ents["er_name_links"].tier == "headline"
     assert ents["dedup_embedding_cells"].tier == "headline"
 
 
 def test_bench_headline_is_tier_derived():
-    """VERDICT r8 #5: the bench set is registry metadata, not a
-    bench.py literal — flagship + headline tiers, in registration
-    order, and explicit diagnostic registrations stay OUT even if a
-    stale list would have benched them (er_name_pairs)."""
-    import bench
+    """VERDICT r8 #5: the headline set is registry metadata, not a
+    hand-maintained list — flagship + headline tiers, and explicit
+    diagnostic registrations stay OUT even where a stale list would
+    have included them (er_name_pairs)."""
     ents = registry.entries()
-    derived = registry.headline_names()
-    assert bench.HEADLINE == derived
-    assert [n for n in derived
-            if ents[n].tier not in ("flagship", "headline")] == []
+    derived = [n for n, e in ents.items()
+               if e.tier in ("flagship", "headline")]
     assert set(registry.FLAGSHIP) <= set(derived)
     assert "er_name_pairs" not in derived          # tier="diagnostic"
     assert "dedup_embedding" not in derived        # tier="diagnostic"
-    # every first-class family keeps at least one benched query
-    fam_benched = {ents[n].family for n in derived}
+    # every first-class family keeps at least one headline query
+    fam_headline = {ents[n].family for n in derived}
     for fam in ("dedup", "similarity", "embedding", "multimodal",
                 "text", "streaming", "monitoring", "quality",
                 "dataprep", "entity-resolution", "cdc", "search",
                 "tpch", "product-analytics"):
-        assert fam in fam_benched, f"family {fam} unbenched"
+        assert fam in fam_headline, f"family {fam} has no headline query"
 
 
 def test_tier_metadata_validates_names():
     """A typo in FLAGSHIP/HEADLINE must fail loudly at load, not
-    silently shrink the bench."""
+    silently shrink the headline set."""
     assert all(n in registry.entries()
                for n in (*registry.FLAGSHIP, *registry.HEADLINE))
 

@@ -32,6 +32,22 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         # co-located buckets: the join must not introduce an Exchange
         assert "Exchange hashpartitioning" not in plan
         assert joined.count() == lineitem.count()
+
+        # fact ⋈ fact at scale: neither side broadcasts, and a groupBy
+        # on the bucket key after the sort-merge join reuses the same
+        # co-location — ZERO Exchange of any kind in the plan
+        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            per_order = joined.groupBy("o_orderkey").agg(
+                F.sum("l_extendedprice").alias("revenue"))
+            plan = per_order._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert "SortMergeJoin" in plan
+            assert per_order.count() == lineitem.select(
+                "l_orderkey").distinct().count()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     finally:
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")

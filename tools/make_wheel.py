@@ -63,10 +63,6 @@ def build_wheel(out_dir: str | None = None) -> str:
                 seen.add(arc)
                 with open(path, "rb") as fh:
                     files.append((arc, fh.read()))
-    for mod in meta["tool"]["setuptools"].get("py-modules", []):
-        path = os.path.join(REPO, f"{mod}.py")
-        with open(path, "rb") as fh:
-            files.append((f"{mod}.py", fh.read()))
     # tools/ ships as a package but may lack __init__.py on disk
     if not any(arc == "tools/__init__.py" for arc, _ in files):
         files.append(("tools/__init__.py", b""))

@@ -17,6 +17,39 @@ Determinism (SURVEY §3): money aggregates use exact integer-cents
 sums; baseline statistics derive from integer window sums; ratio
 outputs floor-truncate at 4 places; z-scores guard std>0 exactly
 like revenue_detector.py:49.
+
+Shared bases: the monitoring sweep runs many detectors over the
+same two tables, so those detectors build on two aggregate bases
+instead of re-aggregating the raw scan each:
+
+- ``orders_daily_base`` (orders per day: exact cents, count, last
+  order timestamp) feeds ``revenue_daily``, ``revenue_anomaly``,
+  ``revenue_forecast`` and ``revenue_dow_context``, and supplies the
+  orders anchor of ``revenue_breakdown``, ``transaction_breakdown``,
+  ``pattern_break_region`` and ``reconciliation_orders_lineitem``.
+- ``events_hourly_base`` (events per ``(event_type, d, h)``: count,
+  max(ts), null counts, and flags for the 24 h / 1 h / 30-day window
+  each row falls in relative to the anchor) feeds
+  ``transaction_volume_anomaly``, ``freshness_check``, ``feed_status``,
+  ``feed_trends``, ``feed_historical_context``,
+  ``sla_processing_velocity`` and ``quality_null_trend``, and supplies
+  the anchor of ``quality_duplicate_trend``.
+
+Each base ends in ``coalesce(1)``: its grain is bounded by days ×
+hours × feeds at any scale, and a single-partition input already
+satisfies every distribution the readers ask for, so their groupBys
+and windows plan no Exchange (and launch no job of their own). A
+base is never the raw fact table: the aggregation runs distributed
+first. ``jobs.evaluate_detectors`` ``cache()``s a base that two or
+more requested detectors read; Spark's CacheManager then swaps the
+cached relation into every reader's plan, even one built from a
+fresh ``catalog.load``, so builders stay the only code path. It is
+``cache()``, not ``localCheckpoint()``: a checkpointed relation
+reports unknown partitioning, and every reader would plan an
+``Exchange SinglePartition`` (and a job) again. Per-key baselines
+over a base are windows (``partitionBy("h")``), not self-joins: the
+window runs inside the reader's single stage, the join plans a
+broadcast and a second job.
 """
 
 from __future__ import annotations
@@ -26,11 +59,79 @@ from pyspark.sql import functions as F
 
 from selfhealingdatapipeline_gcp_spark.functions import money
 
+def _max_over_all(col: str):
+    """max(col) over every row, as a window: over a single-partition
+    base it runs inside the reader's stage (no broadcast, no job)."""
+    return F.max(col).over(Window.rowsBetween(Window.unboundedPreceding,
+                                              Window.unboundedFollowing))
+
 
 def _with_anchor(df: DataFrame, col: str, alias: str = "anchor") -> DataFrame:
     """Cross-join the table's max(col) as a broadcast scalar."""
     anchor = df.agg(F.max(col).alias(alias))
     return df.crossJoin(F.broadcast(anchor))
+
+
+# ---------------------------------------------------------------------------
+# shared aggregate bases (see the module docstring)
+# ---------------------------------------------------------------------------
+
+def orders_daily_base(orders: DataFrame) -> DataFrame:
+    """Orders at day grain: ``d``, exact integer cents ``rev_c``
+    (decimal-mode widened like every money sum), ``n_txn`` and the
+    day's latest ``o_orderdate`` (``last_ts``; the table's anchor is
+    its max). One partition, O(days) rows."""
+    return (
+        orders
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(
+            F.sum(money.acc(money.cents(F.col("o_totalprice"))))
+             .alias("rev_c"),
+            F.count(F.lit(1)).alias("n_txn"),
+            F.max("o_orderdate").alias("last_ts"),
+        )
+        .coalesce(1)
+    )
+
+
+def _with_orders_anchor(orders: DataFrame) -> DataFrame:
+    """``_with_anchor(orders, "o_orderdate")`` with the max read off the
+    day base rather than a second aggregation of the raw table."""
+    anchor = orders_daily_base(orders).agg(F.max("last_ts").alias("anchor"))
+    return orders.crossJoin(F.broadcast(anchor))
+
+
+def events_hourly_base(events: DataFrame, window_days: int = 30,
+                       null_cols: tuple[str, ...] = ("value", "props"),
+                       ) -> DataFrame:
+    """Events at ``(event_type, d, h)`` grain with the anchor ``now_ts``
+    (max ts) on every row: ``cnt``, ``max_ts``, one ``n_null_<col>``
+    per ``null_cols``, and flags ``in_24h``/``in_1h`` (ts within that
+    span before the anchor, exclusive) and ``in_window`` (ts at most
+    ``window_days`` before it, inclusive). The flags are grouping keys,
+    so an hour cut by a window bound splits into two rows and every
+    count stays exact. One partition, O(types × days × 24) rows."""
+    ts, now_ts = F.col("ts"), F.col("now_ts")
+    return (
+        _with_anchor(events, "ts", "now_ts")
+        .groupBy(
+            "event_type",
+            F.to_date("ts").alias("d"),
+            F.hour("ts").alias("h"),
+            "now_ts",
+            (ts > now_ts - F.expr("INTERVAL 24 HOURS")).alias("in_24h"),
+            (ts > now_ts - F.expr("INTERVAL 1 HOURS")).alias("in_1h"),
+            (ts >= now_ts - F.expr(f"INTERVAL {window_days} DAYS"))
+            .alias("in_window"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.max("ts").alias("max_ts"),
+            *[F.sum(F.col(c).isNull().cast("int")).alias(f"n_null_{c}")
+              for c in null_cols],
+        )
+        .coalesce(1)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -40,14 +141,10 @@ def _with_anchor(df: DataFrame, col: str, alias: str = "anchor") -> DataFrame:
 def revenue_daily(orders: DataFrame) -> DataFrame:
     """Daily revenue rollup (revenue_detector.py:91-105
     ``_get_daily_revenue`` generalized to all days)."""
-    return (
-        orders
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            money.sum_money(F.col("o_totalprice")).alias("revenue"),
-            F.count(F.lit(1)).alias("n_txn"),
-        )
-    )
+    # (Σ cents) / 100.0 as double is money.sum_money's own arithmetic
+    return orders_daily_base(orders).select(
+        "d", (F.col("rev_c") / 100.0).cast("double").alias("revenue"),
+        "n_txn")
 
 
 def revenue_anomaly(orders: DataFrame,
@@ -73,8 +170,7 @@ def revenue_anomaly(orders: DataFrame,
     # applies it live). $100 granularity in a daily-revenue stddev is
     # immaterial; the oracle mirrors the same scaling.
     daily = (
-        orders.groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum(money.cents(F.col("o_totalprice"))).alias("rev_c"))
+        orders_daily_base(orders)
         # exact whole-dollar value: (k·100)/100 is exact in IEEE
         .withColumn(
             "rev_usd",
@@ -136,12 +232,12 @@ def revenue_forecast(orders: DataFrame, days_ahead: int = 7,
     the average; the projection repeats the reference's float
     arithmetic order so oracles match bit-exactly."""
     daily = (
-        _with_anchor(orders, "o_orderdate")
-        .filter(F.to_date("o_orderdate")
+        orders_daily_base(orders)
+        .withColumn("anchor", _max_over_all("last_ts"))
+        .filter(F.col("d")
                 >= F.to_date(F.col("anchor")
                              - F.expr(f"INTERVAL {history_days} DAYS")))
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum(money.cents(F.col("o_totalprice"))).alias("rev_c"))
+        .select("d", "rev_c")
     )
     # unpartitioned day-grain window — O(days) rows, deliberate (see
     # revenue_anomaly)
@@ -178,7 +274,7 @@ def revenue_breakdown(orders: DataFrame, lineitem: DataFrame,
 
     Facts shuffle on the order key; all dims broadcast."""
     window_orders = (
-        _with_anchor(orders, "o_orderdate")
+        _with_orders_anchor(orders)
         .filter(F.col("o_orderdate") >= F.col("anchor") - F.expr("INTERVAL 30 DAYS"))
     )
     return (
@@ -214,28 +310,25 @@ def transaction_volume_anomaly(events: DataFrame,
     (transaction_detector.py:21-142: recent count compared against an
     hourly avg/std baseline).
 
-    Two aggregations over the same (day, hour) grain; baseline join is
-    on 24 hour keys → broadcast."""
+    (day, hour) counts from the events base; the per-hour-of-day
+    baseline over the days before the anchor is a window on the hour
+    key, and an hour with no history has no baseline (no row)."""
     by_hour = (
-        _with_anchor(events, "ts")
-        .select(
-            F.to_date("ts").alias("d"),
-            F.hour("ts").alias("h"),
-            F.to_date("anchor").alias("anchor_day"),
-        )
-        .groupBy("d", "h", "anchor_day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        events_hourly_base(events)
+        .groupBy("d", "h", F.to_date("now_ts").alias("anchor_day"))
+        .agg(F.sum("cnt").alias("cnt"))
     )
     # exact integer sums → derived avg/std (engine-native stddev
     # accumulation differs at ulp level; see revenue_anomaly)
-    baseline = (
-        by_hour.filter(F.col("d") < F.col("anchor_day"))
-        .groupBy("h")
-        .agg(
-            F.sum("cnt").alias("s1"),
-            F.sum(F.col("cnt") * F.col("cnt")).alias("s2"),
-            F.count(F.lit(1)).alias("nb"),
-        )
+    past = F.col("d") < F.col("anchor_day")
+    by_h = Window.partitionBy("h")
+    current = (
+        by_hour
+        .withColumn("s1", F.sum(F.when(past, F.col("cnt"))).over(by_h))
+        .withColumn("s2", F.sum(F.when(past, F.col("cnt") * F.col("cnt")))
+                    .over(by_h))
+        .withColumn("nb", F.count(F.when(past, F.lit(1))).over(by_h))
+        .filter((F.col("d") == F.col("anchor_day")) & (F.col("nb") > 0))
     )
     nb = F.col("nb").cast("double")
     s1 = F.col("s1").cast("double")
@@ -245,11 +338,10 @@ def transaction_volume_anomaly(events: DataFrame,
         F.sqrt(F.greatest(
             (F.col("s2").cast("double") - s1 * s1 / nb) / (nb - 1),
             F.lit(0.0))))
-    current = by_hour.filter(F.col("d") == F.col("anchor_day"))
     z = F.when(base_std > 0,
                (F.col("cnt") - base_avg) / base_std).otherwise(F.lit(0.0))
     return (
-        current.join(F.broadcast(baseline), "h")
+        current
         .select(
             F.col("h").alias("hour"),
             F.col("cnt").alias("txn_count"),
@@ -268,12 +360,11 @@ def revenue_dow_context(orders: DataFrame, lookback_days: int = 90,
     anchor's weekday within the lookback, newest first — the relation
     the reference summarizes into its alert text). Day-grain relation;
     the ranking window is tiny at any SF."""
-    daily = (
-        _with_anchor(orders, "o_orderdate")
-        .groupBy(F.to_date("o_orderdate").alias("d"),
-                 F.to_date("anchor").alias("anchor_day"))
-        .agg(money.sum_money(F.col("o_totalprice")).alias("revenue"))
-    )
+    daily = orders_daily_base(orders).select(
+        "d",
+        F.to_date(_max_over_all("last_ts")).alias("anchor_day"),
+        # money.sum_money's arithmetic on the base's exact cents
+        (F.col("rev_c") / 100.0).cast("double").alias("revenue"))
     return (
         daily
         .filter(
@@ -294,15 +385,18 @@ def feed_historical_context(events: DataFrame, days: int = 30) -> DataFrame:
     context attached to missing-feed alerts). The reference filters to
     the currently-missing feeds; this emits all feeds so the caller
     (or a join against feed_status) selects — one scan either way."""
+    # avg(hour) = Σ h·cnt / Σ cnt: the same exact double that avg()
+    # divides out of its (integer-valued) sum and count
     return (
-        _with_anchor(events, "ts", "now_ts")
-        .filter(F.col("ts") >= F.col("now_ts") - F.expr(f"INTERVAL {days} DAYS"))
+        events_hourly_base(events, window_days=days)
+        .filter(F.col("in_window"))
         .groupBy(F.col("event_type").alias("feed_id"))
         .agg(
-            F.count(F.lit(1)).alias("total_arrivals"),
-            F.countDistinct(F.to_date("ts")).alias("days_arrived"),
-            F.max("ts").alias("last_seen"),
-            money.trunc(F.avg(F.hour("ts"))).alias("avg_arrival_hour"),
+            F.sum("cnt").alias("total_arrivals"),
+            F.countDistinct("d").alias("days_arrived"),
+            F.max("max_ts").alias("last_seen"),
+            money.trunc(F.sum(F.col("h") * F.col("cnt"))
+                        / F.sum("cnt")).alias("avg_arrival_hour"),
         )
     )
 
@@ -317,7 +411,7 @@ def transaction_breakdown(orders: DataFrame, lineitem: DataFrame,
     top-N by volume). Same dim-broadcast shape as revenue_breakdown;
     ranked by transaction count — this is the VOLUME-anomaly analog."""
     window_orders = (
-        _with_anchor(orders, "o_orderdate")
+        _with_orders_anchor(orders)
         .filter(F.col("o_orderdate")
                 >= F.col("anchor") - F.expr(f"INTERVAL {hours} HOURS"))
     )
@@ -352,12 +446,14 @@ def _pattern_break(counts_by_day: DataFrame, key: str,
     """Shared shape for pattern_detector.py:72-172: recent daily rate
     per key vs prior-window daily rate, % deviation, break flag.
 
-    counts_by_day: (d, <key>, cnt, anchor_day)."""
+    counts_by_day: (d, <key>, cnt, anchor_day), O(days × keys) rows —
+    one partition, so the per-key rollup needs no second shuffle."""
     recent_lo = F.col("anchor_day") - F.expr(f"INTERVAL {recent_days} DAYS")
     base_lo = F.col("anchor_day") - F.expr(
         f"INTERVAL {recent_days + baseline_days} DAYS")
     agg = (
         counts_by_day
+        .coalesce(1)
         .filter(F.col("d") > base_lo)
         .groupBy(key)
         .agg(
@@ -388,7 +484,7 @@ def pattern_break_region(orders: DataFrame, customer: DataFrame,
     """Geographic pattern break (pattern_detector.py:72-121), region
     via customer→nation→region broadcast joins."""
     counts = (
-        _with_anchor(orders, "o_orderdate")
+        _with_orders_anchor(orders)
         .join(F.broadcast(customer.select("c_custkey", "c_nationkey")),
               F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -431,31 +527,30 @@ def reconciliation_orders_lineitem(orders: DataFrame, lineitem: DataFrame,
     """Source-vs-destination record reconciliation per day
     (reconciliation_detector.py:20-144: source/destination counts +
     discrepancy %). Source = orders; destination = orders that
-    materialized lineitems (left_semi join on the order key)."""
+    materialized lineitems. One pass: each windowed order left-joins
+    the distinct lineitem order keys, and one day-grain aggregation
+    counts both sides."""
     window_orders = (
-        _with_anchor(orders, "o_orderdate")
+        _with_orders_anchor(orders)
         .filter(F.col("o_orderdate")
                 > F.col("anchor") - F.expr(f"INTERVAL {window_days} DAYS"))
         .select("o_orderkey", F.to_date("o_orderdate").alias("d"))
     )
-    src = window_orders.groupBy("d").agg(F.count(F.lit(1)).alias("n_source"))
-    matched = (
-        window_orders
-        .join(lineitem.select("l_orderkey"),
-              F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("n_dest"))
-    )
-    n_dest = F.coalesce(F.col("n_dest"), F.lit(0))
+    delivered = lineitem.select("l_orderkey").distinct()
+    n_source, n_dest = F.col("n_source"), F.col("n_dest")
     return (
-        src.join(matched, "d", "left")
+        window_orders
+        .join(delivered, F.col("o_orderkey") == F.col("l_orderkey"), "left")
+        .groupBy("d")
+        .agg(F.count(F.lit(1)).alias("n_source"),
+             F.count("l_orderkey").alias("n_dest"))
         .select(
             "d",
             "n_source",
-            n_dest.alias("n_dest"),
-            money.trunc((F.col("n_source") - n_dest) * 100.0
-                        / F.col("n_source")).alias("discrepancy_pct"),
-            (F.col("n_source") != n_dest).alias("is_mismatch"),
+            "n_dest",
+            money.trunc((n_source - n_dest) * 100.0
+                        / n_source).alias("discrepancy_pct"),
+            (n_source != n_dest).alias("is_mismatch"),
         )
     )
 
@@ -466,25 +561,25 @@ def reconciliation_hourly_breakdown(source: DataFrame, dest: DataFrame,
     (reconciliation_detector.py:101-144 ``_get_hourly_breakdown``:
     per-hour counts on the incident day, FULL OUTER JOIN, keep only
     nonzero discrepancies). The incident day is the source's anchor
-    (max ts); both sides collapse to ≤24-row hour relations before
-    the join — the full outer join is on a tiny grain at any SF."""
-    anchor = source.agg(F.to_date(F.max(ts_col)).alias("anchor_day"))
-    src_h = (
-        source.crossJoin(F.broadcast(anchor))
-        .filter(F.to_date(ts_col) == F.col("anchor_day"))
-        .groupBy(F.hour(ts_col).alias("hour"))
-        .agg(F.count(F.lit(1)).alias("source_count"))
-    )
-    dst_h = (
-        dest.crossJoin(F.broadcast(anchor))
-        .filter(F.to_date(ts_col) == F.col("anchor_day"))
-        .groupBy(F.hour(ts_col).alias("hour"))
-        .agg(F.count(F.lit(1)).alias("dest_count"))
-    )
+    (max ts). Both sides collapse to single-partition (day, hour)
+    relations first, so the anchor is a window over the joined rows
+    and the full outer join runs on a tiny grain at any SF."""
+    def by_hour(df: DataFrame, count_col: str, *aggs) -> DataFrame:
+        return (
+            df.groupBy(F.to_date(ts_col).alias("d"),
+                       F.hour(ts_col).alias("hour"))
+            .agg(F.count(F.lit(1)).alias(count_col), *aggs)
+            .coalesce(1)
+        )
+
+    src_h = by_hour(source, "source_count", F.max(ts_col).alias("last_ts"))
+    dst_h = by_hour(dest, "dest_count")
     sc = F.coalesce(F.col("source_count"), F.lit(0))
     dc = F.coalesce(F.col("dest_count"), F.lit(0))
     return (
-        src_h.join(dst_h, "hour", "full_outer")
+        src_h.join(dst_h, ["d", "hour"], "full_outer")
+        .withColumn("anchor_day", F.to_date(_max_over_all("last_ts")))
+        .filter(F.col("d") == F.col("anchor_day"))
         .select(
             "hour",
             sc.alias("source_count"),
@@ -506,13 +601,13 @@ def freshness_check(events: DataFrame, max_age_minutes: float = 60.0) -> DataFra
     Ages computed on exact epoch microseconds so the DuckDB oracle
     can't drift."""
     per_source = (
-        events.groupBy(F.col("event_type").alias("source"))
-        .agg(F.max("ts").alias("last_update"))
+        events_hourly_base(events)
+        .groupBy(F.col("event_type").alias("source"), "now_ts")
+        .agg(F.max("max_ts").alias("last_update"))
     )
-    global_max = events.agg(F.max("ts").alias("now_ts"))
     age_min = (F.unix_micros("now_ts") - F.unix_micros("last_update")) / 60e6
     return (
-        per_source.crossJoin(F.broadcast(global_max))
+        per_source
         .select(
             "source",
             "last_update",
@@ -529,24 +624,19 @@ def freshness_check(events: DataFrame, max_age_minutes: float = 60.0) -> DataFra
 def feed_status(events: DataFrame, cutoff_hour: int = 17) -> DataFrame:
     """Expected-vs-arrived feed check at a daily cutoff
     (feed_detector.py:20-114: which feeds arrived today before
-    17:00, plus arrival stats). Expected set = all feed ids ever seen
-    (a distinct over the scan); arrivals = anchor-day events before
-    the cutoff hour."""
-    expected = events.select(F.col("event_type").alias("feed_id")).distinct()
-    today = (
-        _with_anchor(events, "ts")
-        .filter(
-            (F.to_date("ts") == F.to_date("anchor"))
-            & (F.hour("ts") < cutoff_hour)
-        )
+    17:00, plus arrival stats). Expected set = all feed ids ever seen;
+    arrivals = anchor-day events before the cutoff hour; both are one
+    groupBy over the events base. A NULL feed id is expected but never
+    matches an arrival (the reference's join semantics)."""
+    today = ((F.col("d") == F.to_date("now_ts")) & (F.col("h") < cutoff_hour)
+             & F.col("event_type").isNotNull())
+    return (
+        events_hourly_base(events)
         .groupBy(F.col("event_type").alias("feed_id"))
         .agg(
-            F.max("ts").alias("last_arrival"),
-            F.count(F.lit(1)).alias("n_arrivals"),
+            F.max(F.when(today, F.col("max_ts"))).alias("last_arrival"),
+            F.sum(F.when(today, F.col("cnt"))).alias("n_arrivals"),
         )
-    )
-    return (
-        expected.join(today, "feed_id", "left")
         .select(
             "feed_id",
             F.col("last_arrival"),
@@ -562,15 +652,14 @@ def feed_status(events: DataFrame, cutoff_hour: int = 17) -> DataFrame:
 def feed_trends(events: DataFrame, days: int = 30) -> DataFrame:
     """Per-day feed arrival trend over the trailing window
     (feed_detector.py:195-214 ``get_feed_trends``: distinct feeds +
-    total arrivals per day). One shuffle to day grain; the distinct
-    count gets map-side partial aggregation."""
+    total arrivals per day), rolled up from the events base."""
     return (
-        _with_anchor(events, "ts", "now_ts")
-        .filter(F.col("ts") >= F.col("now_ts") - F.expr(f"INTERVAL {days} DAYS"))
-        .groupBy(F.to_date("ts").alias("d"))
+        events_hourly_base(events, window_days=days)
+        .filter(F.col("in_window"))
+        .groupBy("d")
         .agg(
             F.countDistinct("event_type").alias("feed_count"),
-            F.count(F.lit(1)).alias("total_arrivals"),
+            F.sum("cnt").alias("total_arrivals"),
         )
     )
 
@@ -584,19 +673,19 @@ def sla_processing_velocity(events: DataFrame,
     """Processing velocity + SLA-breach projection
     (sla_detector.py:20-124: records/hour over a trailing window,
     projected completion vs the SLA). Velocity = trailing 24 h rate;
-    backlog = trailing 1 h arrivals. Single-pass conditional agg.
+    backlog = trailing 1 h arrivals. One conditional agg over the
+    events base's window flags.
 
     Emits the reference's scaling recommendation
     (sla_detector.py:113-124 ``_calculate_required_scaling``):
     required_rate = backlog / sla_hours, scaling_factor =
     required/current (0 when idle), recommended_workers =
     int(scaling_factor) + 1 — the payload its SLA alert attaches."""
-    with_anchor = _with_anchor(events, "ts", "now_ts")
-    in_24h = F.col("ts") > F.col("now_ts") - F.expr("INTERVAL 24 HOURS")
-    in_1h = F.col("ts") > F.col("now_ts") - F.expr("INTERVAL 1 HOURS")
-    agg = with_anchor.agg(
-        F.sum(F.when(in_24h, 1).otherwise(0)).alias("n_24h"),
-        F.sum(F.when(in_1h, 1).otherwise(0)).alias("backlog_1h"),
+    agg = events_hourly_base(events).agg(
+        F.sum(F.when(F.col("in_24h"), F.col("cnt")).otherwise(0))
+         .alias("n_24h"),
+        F.sum(F.when(F.col("in_1h"), F.col("cnt")).otherwise(0))
+         .alias("backlog_1h"),
     )
     velocity = F.col("n_24h") / 24.0
     projected = F.when(velocity > 0, F.col("backlog_1h") / velocity).otherwise(F.lit(0.0))
@@ -621,24 +710,25 @@ def quality_null_trend(events: DataFrame,
                        columns: tuple[str, ...] = ("value", "props")) -> DataFrame:
     """Anchor-day null rate vs historical baseline per column
     (quality_detector.py:67-116 ``_check_null_trends``). Long-format
-    output via a single conditional aggregation + stack."""
-    a = _with_anchor(events, "ts")
-    is_today = F.to_date("ts") == F.to_date("anchor")
+    output via a single conditional aggregation over the events base
+    + stack."""
+    a = events_hourly_base(events, null_cols=columns)
+    is_today = F.col("d") == F.to_date("now_ts")
     aggs = []
     for c in columns:
-        isnull = F.col(c).isNull().cast("int")
+        n_null, n = F.col(f"n_null_{c}"), F.col("cnt")
         # try_divide: a corpus whose history (or anchor day) is empty
         # has an UNDEFINED rate, not a crash — NULL propagates through
         # delta and coalesces to is_degraded=false. Real history keeps
         # the plain-division arithmetic bit-for-bit (same operands).
         aggs += [
             F.try_divide(
-                F.sum(F.when(is_today, isnull).otherwise(0)) * 100.0,
-                F.sum(F.when(is_today, 1).otherwise(0)))
+                F.sum(F.when(is_today, n_null).otherwise(0)) * 100.0,
+                F.sum(F.when(is_today, n).otherwise(0)))
              .alias(f"{c}__today"),
             F.try_divide(
-                F.sum(F.when(~is_today, isnull).otherwise(0)) * 100.0,
-                F.sum(F.when(~is_today, 1).otherwise(0)))
+                F.sum(F.when(~is_today, n_null).otherwise(0)) * 100.0,
+                F.sum(F.when(~is_today, n).otherwise(0)))
              .alias(f"{c}__base"),
         ]
     wide = a.agg(*aggs)
@@ -669,8 +759,9 @@ def quality_duplicate_trend(events: DataFrame, window_days: int = 14) -> DataFra
 
     Rates are integer e4 units inside the window sum so the baseline
     average is bit-identical across engines."""
+    anchor = events_hourly_base(events).agg(F.max("now_ts").alias("anchor"))
     w = (
-        _with_anchor(events, "ts")
+        events.crossJoin(F.broadcast(anchor))
         .filter(F.to_date("ts")
                 > F.to_date(F.col("anchor") - F.expr(f"INTERVAL {window_days} DAYS")))
         .select(F.to_date("ts").alias("d"), "user_id", "event_type", "value")
@@ -688,9 +779,11 @@ def quality_duplicate_trend(events: DataFrame, window_days: int = 14) -> DataFra
             F.floor((F.col("n_rows") - F.col("n_distinct")) * 1000000.0
                     / F.col("n_rows")).cast("bigint").alias("__dup_e4"),
         )
+        .coalesce(1)
     )
     # unpartitioned day-grain window: O(days) rows forever — bounded,
-    # deliberately single-partition (not a scale risk)
+    # deliberately single-partition (not a scale risk), so the day
+    # relation is one partition already and the window adds no shuffle
     base_w = Window.orderBy("d").rowsBetween(-30, -1)
     base_e4 = F.sum("__dup_e4").over(base_w) / F.count("__dup_e4").over(base_w)
     return day.select(

@@ -212,12 +212,24 @@ def dedup_against_history(alerts: DataFrame, history: DataFrame,
     dict — survives restarts and scales to any alert volume).
 
     history: (detector, alert_key, sent_ts). now_ts: Column/literal
-    timestamp for "now" (never wall-clock inside the plan)."""
-    recent = history.filter(
-        F.col("sent_ts") >= F.lit(now_ts) - F.expr(
-            f"INTERVAL {window_hours} HOURS")
-    ).select("detector", "alert_key")
-    return alerts.join(recent, ["detector", "alert_key"], "left_anti")
+    timestamp for "now" (never wall-clock inside the plan).
+
+    Written as a left join on the distinct recent keys plus a null
+    filter, not as a ``left_anti`` join: Spark pushes an anti join
+    below ``collect_alerts``' dedup and union into every rule's leg,
+    and then broadcasts the history once per rule (ten broadcast jobs
+    where one does)."""
+    keys = ["detector", "alert_key"]
+    recent = (
+        history.filter(
+            F.col("sent_ts") >= F.lit(now_ts) - F.expr(
+                f"INTERVAL {window_hours} HOURS"))
+        .select(*keys).distinct()
+        .withColumn("__sent", F.lit(True))
+    )
+    return (alerts.join(recent, keys, "left")
+            .filter(F.col("__sent").isNull())
+            .select(*alerts.columns))
 
 
 class AlertSender:

@@ -59,11 +59,14 @@ def read_alert_history(spark: SparkSession, root: str) -> DataFrame:
     that delivered nothing left only ``_SUCCESS`` there — so the first
     sweep suppresses nothing. Any other read failure (a corrupt file,
     a denied path) raises: an empty history would re-deliver every
-    alert instead of surfacing the error."""
+    alert instead of surfacing the error. That holds even after a
+    healed corrupt-file failure turned on
+    ``spark.sql.files.ignoreCorruptFiles`` for the session: skipping
+    the bad file would read as "nothing persisted" too."""
     path = os.path.join(root, ALERTS_SUBDIR)
     try:
-        return spark.read.parquet(path).select(
-            "detector", "alert_key", "sent_ts")
+        return (spark.read.option("ignoreCorruptFiles", "false")
+                .parquet(path).select("detector", "alert_key", "sent_ts"))
     except AnalysisException as exc:
         if exc.getCondition() not in _NO_HISTORY:
             raise

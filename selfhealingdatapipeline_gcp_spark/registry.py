@@ -95,12 +95,14 @@ HEADLINE = (
     "zorder_layout_plan", "takedown_manifest", "distinct_kmv_audit",
     "streaming_kmv_guard", "join_skew_advisor", "range_partition_plan",
     "neyman_allocation_plan", "series_downsample_m4", "asof_next_purchase",
-    "er_name_pairs", "er_blocking_report", "er_name_clusters",
+    "er_blocking_report", "er_name_clusters",
     "forecast_backtest_report", "k_anonymity_audit", "fk_orphan_audit",
     "boilerplate_removal_report", "series_sax_symbols",
     "cdc_incremental_agg", "streaming_er_guard", "sax_motif_novelty",
     "catalog_stats_report", "detector_incident_rollup", "er_name_links",
     "doc_keyphrases", "supplier_scorecard", "bpe_merge_candidates",
+    "bpe_vocab", "bpe_token_ids", "bpe_vocab_deep", "corpus_novelty_curve",
+    "dedup_substring_spans", "semdedup_prune",
 )
 
 #: valid tiers: flagship = the pinned 19-query r1 core (the

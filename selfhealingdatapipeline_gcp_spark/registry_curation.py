@@ -63,7 +63,6 @@ register(
     FROM isl GROUP BY doc_id, island
     ORDER BY doc_id, span_start
     """,
-    tier="headline",
 )
 
 # ---------------------------------------------------------------------------
@@ -106,7 +105,6 @@ register(
     ORDER BY e.vec_id
     """,
     family="dedup",
-    tier="headline",
 )
 
 # ---------------------------------------------------------------------------
@@ -483,7 +481,6 @@ register(
     ORDER BY bucket
     """,
     family="dedup",
-    tier="headline",
 )
 
 register(

@@ -891,7 +891,6 @@ register(
         f"FROM p{r}" for r in range(1, _BPE_N + 1))
     + "\n    ORDER BY merge_round",
     family="text",
-    tier="headline",
 )
 
 register(
@@ -925,7 +924,6 @@ register(
     FROM sub JOIN vid v ON v.sym = sub.token
     """,
     family="text",
-    tier="headline",
 )
 
 # Tokenizer-realistic merge depth (VERDICT r9 #4): 64 sequential
@@ -949,8 +947,6 @@ register(
         f"FROM p{r}" for r in range(1, _BPE_DEEP_N + 1))
     + "\n    ORDER BY merge_round",
     family="text",
-    # headline: BENCH tracks the 64-round induction cost per round
-    tier="headline",
 )
 
 register(

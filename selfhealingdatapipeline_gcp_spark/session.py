@@ -90,6 +90,13 @@ def get_spark(app_name: str = "selfhealingdatapipeline_gcp_spark",
         # filled with progress frames and parsed nothing). Nothing
         # here is interactive.
         .config("spark.ui.showConsoleProgress", "false")
+        # Every sweep tick builds its detector and alert plans on the
+        # driver. PySpark's per-call call-site capture (a Python stack
+        # walk plus JVM round trips on every Column function) made that
+        # building ~30% slower: the 16 sweep detectors took 2.0 s
+        # instead of 1.45 s on a 4-vCPU host. Errors keep their Python
+        # traceback, which is what the healer classifies.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                _default_driver_mem()))

@@ -504,6 +504,37 @@ def test_read_alert_history_raises_on_corrupt_file(spark, tmp_path):
     assert fix.root_cause == "corrupt/truncated input file in the scan"
 
 
+def test_corrupt_history_fails_send_alerts_and_delivers_nothing(
+        spark, tmp_path, monkeypatch):
+    """A corrupt file in the persisted history fails the sweep's
+    send_alerts task with the corrupt-file root cause and delivers no
+    alert: read as empty, the history would re-deliver every alert."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs
+    from selfhealingdatapipeline_gcp_spark.plans import history as hist
+
+    root = tmp_path / "state"
+    (root / hist.ALERTS_SUBDIR).mkdir(parents=True)
+    (root / hist.ALERTS_SUBDIR / "part-00000.parquet").write_bytes(
+        b"not a parquet file")
+    alert_dir = tmp_path / "alerts"
+    _, results = _record_tasks(monkeypatch)
+    key = "spark.sql.files.ignoreCorruptFiles"
+    before = spark.conf.get(key)
+    try:
+        out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
+                                        state_root=str(root),
+                                        alert_dir=str(alert_dir))
+    finally:
+        spark.conf.set(key, before)
+    assert out["statuses"]["send_alerts"] == "FAILED", out["statuses"]
+    assert out["alerts"] is None
+    send = next(r for r in results if r.name == "send_alerts")
+    causes = [f["root_cause"] for f in send.fixes]
+    assert "corrupt/truncated input file in the scan" in causes, causes
+    assert not alert_dir.exists() or not any(alert_dir.iterdir())
+
+
 @pytest.mark.parametrize("log,expected_type,kw", [
     ("java.io.IOException: No space left on device", "CONFIG", "disk"),
     ("com.esotericsoftware.kryo.KryoException: Buffer overflow. Available: 0",
@@ -1199,40 +1230,121 @@ def _record_tasks(monkeypatch):
     return current, results
 
 
+def _jobs_in_task(monkeypatch, name):
+    """Record ``(first, last)`` marker job ids around every run of the
+    pipeline task ``name``; the task launched the jobs strictly
+    between them."""
+    from conftest import marker_job
+
+    spans = []
+    orig = Pipeline._run_task
+
+    def run_task(self, spark, task, context):
+        if task.name != name:
+            return orig(self, spark, task, context)
+        first = marker_job(spark, f"{name}-before-{len(spans)}")
+        try:
+            return orig(self, spark, task, context)
+        finally:
+            spans.append((first, marker_job(spark,
+                                            f"{name}-after-{len(spans)}")))
+
+    monkeypatch.setattr(Pipeline, "_run_task", run_task)
+    return spans
+
+
 def test_sweep_builds_and_runs_each_detector_once(spark, tmp_path,
                                                    monkeypatch):
     """Every detector is built once per sweep, and the daily report
-    reads the materialized outputs, not the parquet tables."""
+    takes its counts from the materialization: it launches no job."""
     from conftest import SF_SMOKE
     from selfhealingdatapipeline_gcp_spark import jobs
 
     calls = _count_builds(monkeypatch)
-    current, _ = _record_tasks(monkeypatch)
-    df_cls = type(spark.range(1))
-    orig_collect = df_cls.collect
-    report_plans = []
-
-    def collect(self):
-        rows = orig_collect(self)
-        if current["task"] == "daily_report":
-            report_plans.append(
-                self._jdf.queryExecution().executedPlan().toString())
-        return rows
-
-    monkeypatch.setattr(df_cls, "collect", collect)
+    report_jobs = _jobs_in_task(monkeypatch, "daily_report")
     out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
                                     state_root=str(tmp_path / "state"))
     assert all(v == "SUCCESS" for v in out["statuses"].values())
     assert len(out["report"]) == SWEEP_DETECTORS
     assert len(calls) == SWEEP_DETECTORS
     assert set(calls.values()) == {1}, calls
-    assert report_plans
-    assert not any("FileScan" in p for p in report_plans), report_plans
+    [(first, last)] = report_jobs
+    assert last == first + 1, f"daily_report launched {last - first - 1} jobs"
+
+
+def test_sweep_outputs_equal_standalone_builders(spark):
+    """The base-fed, cached sweep outputs are the standalone registry
+    builders' rows (the ones the DuckDB oracles check), row for row,
+    and the daily report's observed counts are their row counts."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs, registry
+
+    outputs = jobs.evaluate_detectors(spark, SF_SMOKE, jobs.SWEEP_DETECTORS)
+    try:
+        qs = registry.queries()
+        for name in jobs.SWEEP_DETECTORS:
+            want = qs[name](spark, SF_SMOKE)
+            got = outputs[name]
+            assert got.schema == want.schema, name
+            rows = sorted(map(tuple, got.collect()), key=repr)
+            assert rows == sorted(map(tuple, want.collect()), key=repr), name
+            assert outputs.row_counts[name] == len(rows), name
+    finally:
+        jobs.release_outputs(outputs.values())
+
+
+@pytest.mark.parametrize("base", ["orders_daily", "events_hourly"])
+def test_shared_base_readers_read_the_cached_base(spark, base):
+    """Every detector listed as a reader of a shared base plans an
+    InMemoryTableScan while that base is cached — the cache hit the
+    sweep's savings rest on — and none while it is not."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs, registry
+
+    build, readers = jobs.SHARED_BASES[base]
+    qs = registry.queries()
+
+    def plan(name):
+        return qs[name](spark, SF_SMOKE)._jdf.queryExecution(
+            ).executedPlan().toString()
+
+    cached = build(spark, SF_SMOKE).cache()
+    try:
+        missed = [n for n in sorted(readers)
+                  if "InMemoryTableScan" not in plan(n)]
+    finally:
+        cached.unpersist()
+    assert not missed, missed
+    assert not [n for n in sorted(readers) if "InMemoryTableScan" in plan(n)]
+
+
+# Spark jobs one warm sweep launches at sf0.001 (and at sf0.1): the
+# detector pool with its two cached bases, alert collection and
+# delivery, and the history and baseline writes. Scanning the tables
+# once per detector, as the sweep did before the shared bases, took
+# 126.
+WARM_SWEEP_MAX_JOBS = 58
+
+
+def test_warm_sweep_job_budget(spark, tmp_path):
+    """A warm sweep stays within its pinned Spark job count."""
+    from conftest import SF_SMOKE, marker_job
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    root = str(tmp_path / "state")
+    jobs.run_monitoring_sweep(spark, SF_SMOKE, state_root=root)
+    first = marker_job(spark, "warm-sweep-before")
+    out = jobs.run_monitoring_sweep(spark, SF_SMOKE, state_root=root)
+    last = marker_job(spark, "warm-sweep-after")
+    assert all(v == "SUCCESS" for v in out["statuses"].values())
+    assert last - first - 1 <= WARM_SWEEP_MAX_JOBS, last - first - 1
 
 
 def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
     """A detector whose materialization fails on a pool thread fails the
-    detectors task, which heals and succeeds on its second attempt."""
+    detectors task, which heals and succeeds on its second attempt.
+    Materialization starts with ``observe`` (the row count rides the
+    checkpoint), so the failure is injected there."""
     import threading
 
     from conftest import SF_SMOKE
@@ -1253,7 +1365,7 @@ def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
                     raise RuntimeError(
                         "org.apache.spark.shuffle.FetchFailedException: "
                         "Failed to connect to localhost/127.0.0.1:41234")
-                df.localCheckpoint = fail
+                df.observe = fail
             return df
         qs["feed_status"] = flaky
         return qs

@@ -539,10 +539,14 @@ _FINGERPRINTS = {
     "q3_shipping_priority": (1, 2, 0, 0),
     "q5_regional_revenue": (1, 5, 0, 0),
     "q10_returned_items": (1, 3, 0, 0),
-    "revenue_anomaly": (2, 0, 0, 0),
-    # the two BNLJs are 1-row anchor-date broadcasts (annotated at
-    # the operator), not data joins
-    "reconciliation_orders_lineitem": (4, 2, 0, 2),
+    # the day base ends in coalesce(1): the ordered window needs no
+    # SinglePartition Exchange of its own
+    "revenue_anomaly": (1, 0, 0, 0),
+    # the BNLJ is the 1-row anchor-date broadcast read off the orders
+    # day base, not a data join; Exchanges = the base's day grouping,
+    # the distinct lineitem keys (broadcast into the one BHJ) and the
+    # day-grain counts
+    "reconciliation_orders_lineitem": (3, 1, 0, 1),
     "dedup_exact": (1, 0, 0, 0),
     "dedup_minhash_lsh": (4, 0, 0, 0),
     "dedup_lsh_verified": (6, 2, 0, 0),
@@ -731,7 +735,7 @@ _FINGERPRINTS = {
     # four detector legs composed verbatim; every BNLJ is a parent's
     # 1-row anchor broadcast (annotated at each parent); one range
     # Exchange is the (d, detector) report order
-    "detector_incident_rollup": (20, 1, 0, 5),
+    "detector_incident_rollup": (19, 1, 0, 5),
     # name collapse + masked blocks (bucket-grouped, no self-join);
     # n_ids rides the block structs and the cosmetic global sort is
     # gone, so the old pair-dedup Exchange, both n_ids join-backs and

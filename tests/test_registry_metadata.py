@@ -43,7 +43,8 @@ def test_bench_headline_is_tier_derived():
     ents = registry.entries()
     derived = [n for n, e in ents.items()
                if e.tier in ("flagship", "headline")]
-    assert set(registry.FLAGSHIP) <= set(derived)
+    # the two tuples are the only place a headline tier is decided
+    assert set(derived) == set(registry.FLAGSHIP) | set(registry.HEADLINE)
     assert "er_name_pairs" not in derived          # tier="diagnostic"
     assert "dedup_embedding" not in derived        # tier="diagnostic"
     # every first-class family keeps at least one headline query

@@ -24,6 +24,10 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import export_checkout  # noqa: E402
+
+export_checkout()
+
 from selfhealingdatapipeline_gcp_spark.session import get_spark  # noqa: E402
 from selfhealingdatapipeline_gcp_spark import catalog, registry  # noqa: E402
 

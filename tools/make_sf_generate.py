@@ -40,6 +40,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import export_checkout  # noqa: E402
+
+export_checkout()
+
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from selfhealingdatapipeline_gcp_spark import catalog  # noqa: E402

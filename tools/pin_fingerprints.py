@@ -25,6 +25,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import export_checkout  # noqa: E402
+
+export_checkout()
+
 from selfhealingdatapipeline_gcp_spark import registry  # noqa: E402
 from selfhealingdatapipeline_gcp_spark.session import get_spark  # noqa: E402
 

@@ -35,6 +35,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import export_checkout  # noqa: E402
+
+export_checkout()
+
 MAX_ATTEMPTS = 60
 
 

@@ -29,6 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import export_checkout  # noqa: E402
+
+export_checkout()
+
 if __name__ == "__main__" and "SPARK_GRAFT_UI" not in os.environ:
     os.environ["SPARK_GRAFT_UI"] = "1"
 

@@ -388,22 +388,6 @@ def set_llm_analyzer(fn: Callable[[str], Fix | None] | None) -> None:
     _llm_analyzer = fn
 
 
-def extract_error_section(log_text: str, context_chars: int = 4000,
-                          edge_chars: int = 2000) -> str:
-    """Pull the analyzable section out of a raw driver log
-    (self_healing_pipeline.py:100-115): the Traceback block when one
-    exists (up to ``context_chars``), else head + tail — long Spark
-    logs bury the error at the end while config context sits at the
-    top. Feed the result to analyze_error."""
-    start = log_text.find("Traceback (most recent call last):")
-    if start != -1:
-        return log_text[start:start + context_chars]
-    if len(log_text) <= 2 * edge_chars:
-        return log_text
-    return (f"=== START ===\n{log_text[:edge_chars]}\n\n"
-            f"=== END ===\n{log_text[-edge_chars:]}")
-
-
 def analyze_error(error_log: str) -> Fix:
     """Classify an error log into a Fix (vertex_ai_handler.py:5-87,
     deterministic re-expression). First matching rule wins; the

@@ -48,33 +48,34 @@ def write_alert_history(alerts: DataFrame, root: str, sent_ts) -> None:
                           mode="append", partition_by=("sent_date",))
 
 
-# the read errors that mean "nothing persisted yet", not "unreadable"
-_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+# the stored layout: _HISTORY_SCHEMA plus the sent_date partition column
+_STORED_SCHEMA = T.StructType(
+    _HISTORY_SCHEMA.fields + [T.StructField("sent_date", T.DateType())])
 
 
 def read_alert_history(spark: SparkSession, root: str) -> DataFrame:
     """Alert history in dedup_against_history's shape
-    (detector, alert_key, sent_ts); empty relation when no run has
-    persisted a history file yet — the path is missing, or a sweep
-    that delivered nothing left only ``_SUCCESS`` there — so the first
-    sweep suppresses nothing. Any other read failure (a corrupt file,
-    a denied path) raises: an empty history would re-deliver every
-    alert instead of surfacing the error. That holds even after a
-    healed corrupt-file failure turned on
+    (detector, alert_key, sent_ts). The schema is fixed, so the read
+    infers nothing and launches no job: a sweep that delivered nothing
+    left only ``_SUCCESS`` there, which reads as 0 rows. A missing path
+    (no run has persisted a history yet) reads as an empty relation
+    too, so the first sweep suppresses nothing. Any other read failure
+    (a corrupt file, a denied path) raises: an empty history would
+    re-deliver every alert instead of surfacing the error. That holds
+    even after a healed corrupt-file failure turned on
     ``spark.sql.files.ignoreCorruptFiles`` for the session: skipping
     the bad file would read as "nothing persisted" too."""
     path = os.path.join(root, ALERTS_SUBDIR)
+    cols = ("detector", "alert_key", "sent_ts")
     try:
-        return (spark.read.option("ignoreCorruptFiles", "false")
-                .parquet(path).select("detector", "alert_key", "sent_ts"))
+        return (spark.read.schema(_STORED_SCHEMA)
+                .option("ignoreCorruptFiles", "false")
+                .parquet(path).select(*cols))
     except AnalysisException as exc:
-        if exc.getCondition() not in _NO_HISTORY:
+        if exc.getCondition() != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame([], T.StructType([
-            _HISTORY_SCHEMA["detector"],
-            _HISTORY_SCHEMA["alert_key"],
-            _HISTORY_SCHEMA["sent_ts"],
-        ]))
+        return spark.createDataFrame(
+            [], T.StructType([_HISTORY_SCHEMA[c] for c in cols]))
 
 
 def baseline_metrics_from(revenue_daily: DataFrame, anchor_date) -> DataFrame:

@@ -97,6 +97,19 @@ def get_spark(app_name: str = "selfhealingdatapipeline_gcp_spark",
         # instead of 1.45 s on a 4-vCPU host. Errors keep their Python
         # traceback, which is what the healer classifies.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Keep every job's generated classes across runs. Measured in
+        # one process at sf0.1 (the same at sf0.001): the sweep uses
+        # ~281 distinct classes, the ETL job 34 more, curation 145
+        # more, and the history-dedup plan that first appears in
+        # sweep 2 another 9: ~460 in all. The default 100-entry LRU is
+        # smaller than one sweep, so each run evicted every class
+        # before its next use and recompiled all of them (~280 Janino
+        # compiles per warm sweep, 54-102 per ETL run, 159 per curation
+        # run). At 1000 entries, about 2x that working set, every
+        # later run of the three jobs compiled 0 classes. Static conf:
+        # Spark reads it only when the session is built, so it must be
+        # set here.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                _default_driver_mem()))

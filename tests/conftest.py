@@ -112,3 +112,10 @@ def marker_job(spark, name: str) -> int:
         assert time.monotonic() < deadline, f"marker job {name} never listed"
         time.sleep(0.05)
     return max(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this driver so far
+    (Spark's CodegenMetrics counts one sample per compile)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()

@@ -52,28 +52,6 @@ def test_apply_code_fix_double_dot():
     assert ".." not in fixed
 
 
-def test_extract_error_section_traceback():
-    log = ("INFO lots of noise\n" * 200
-           + "Traceback (most recent call last):\n"
-             '  File "job.py", line 3\nKeyError: boom\n'
-           + "INFO trailing\n" * 50)
-    out = healer.extract_error_section(log)
-    assert out.startswith("Traceback (most recent call last):")
-    assert "KeyError: boom" in out
-    # the extracted section classifies the same as the raw error
-    assert healer.analyze_error(out).fix_type == healer.analyze_error(
-        "KeyError: boom").fix_type
-
-
-def test_extract_error_section_head_tail():
-    log = "A" * 3000 + "B" * 3000
-    out = healer.extract_error_section(log)
-    assert out.startswith("=== START ===") and "=== END ===" in out
-    assert len(out) < len(log)
-    short = "tiny log, no traceback"
-    assert healer.extract_error_section(short) == short
-
-
 def test_fix_script_file_roundtrip(tmp_path):
     # file round-trip parity (auto_healer.py:76-90 fix_local_file):
     # read → patch → write-back only when changed
@@ -1320,10 +1298,10 @@ def test_shared_base_readers_read_the_cached_base(spark, base):
 
 # Spark jobs one warm sweep launches at sf0.001 (and at sf0.1): the
 # detector pool with its two cached bases, alert collection and
-# delivery, and the history and baseline writes. Scanning the tables
-# once per detector, as the sweep did before the shared bases, took
-# 126.
-WARM_SWEEP_MAX_JOBS = 58
+# delivery, and the history and baseline writes. The history read
+# takes its fixed schema and launches none. Scanning the tables once
+# per detector, as the sweep did before the shared bases, took 126.
+WARM_SWEEP_MAX_JOBS = 57
 
 
 def test_warm_sweep_job_budget(spark, tmp_path):
@@ -1338,6 +1316,36 @@ def test_warm_sweep_job_budget(spark, tmp_path):
     last = marker_job(spark, "warm-sweep-after")
     assert all(v == "SUCCESS" for v in out["statuses"].values())
     assert last - first - 1 <= WARM_SWEEP_MAX_JOBS, last - first - 1
+
+
+# Generated classes the third run of a job compiles in a driver that
+# already ran it twice (sf0.001). The session's codegen cache holds
+# every class the job uses, so none is compiled again; with Spark's
+# default 100-entry cache a warm sweep recompiled 282 and a warm ETL
+# run 56.
+WARM_RUN_MAX_COMPILES = 0
+
+
+@pytest.mark.parametrize("job", ["sweep", "etl"])
+def test_warm_runs_reuse_generated_code(spark, tmp_path, job):
+    """A long-lived driver that runs a job again compiles no new
+    generated classes: the third run reuses the first two's code."""
+    from conftest import SF_SMOKE, codegen_compiles
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    def run(i):
+        if job == "sweep":
+            return jobs.run_monitoring_sweep(
+                spark, SF_SMOKE, state_root=str(tmp_path / "state"))
+        return jobs.run_etl_job(spark, SF_SMOKE, str(tmp_path / f"sink{i}"))
+
+    run(0)
+    run(1)
+    before = codegen_compiles(spark)
+    out = run(2)
+    compiled = codegen_compiles(spark) - before
+    assert all(v == "SUCCESS" for v in out["statuses"].values())
+    assert compiled <= WARM_RUN_MAX_COMPILES, compiled
 
 
 def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):

@@ -5,13 +5,15 @@ check, with self-healing on failure).
 ``run_etl_job`` is the equivalent of triggering the Airflow DAG: it
 builds the transform, gates it on data quality, writes the sink, and
 routes detector alerts — all through the self-healing Pipeline
-runner, so any task failure goes through analyze → suggest → apply →
-retry.
+runner, so any task failure goes through analyze → apply → retry,
+and the fix is undone when the task ends.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import time
 from collections.abc import Iterable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
@@ -286,66 +288,43 @@ def run_scheduled_sweeps(spark: SparkSession, sf_dir: str,
                          interval_s: float = 3600.0,
                          max_runs: int | None = None,
                          alert_dir: str | None = None,
-                         sleep=None) -> list[dict[str, Any]]:
+                         sleep=time.sleep) -> list[dict[str, Any]]:
     """The monitoring sweep on a recurring schedule — the in-process
     counterpart of the reference's daily cron
     (dag/financial_monitoring_complete.py:176
     ``schedule_interval='0 17 * * *'``) and hourly pipeline DAG.
-    Each tick runs the full sweep through the self-healing runner;
-    alert suppression across ticks rides the persisted
-    monitoring_alerts history at ``state_root`` (a repeat firing
-    within the dedup window delivers NOTHING on later ticks — the
-    reference's ``_is_duplicate`` check, restart-proof).
+    Each tick is one ``run_monitoring_sweep``, whose tasks heal
+    themselves; ``sleep(interval_s)`` runs between ticks, never after
+    the last one, and ``max_runs=None`` loops forever. Alert
+    suppression across ticks rides the persisted monitoring_alerts
+    history at ``state_root`` (a repeat firing within the dedup window
+    delivers NOTHING on later ticks — the reference's ``_is_duplicate``
+    check, restart-proof), so ``state_root`` is required.
 
-    ``state_root`` is required: scheduled sweeps without persisted
-    history would re-alert every tick. Returns one sweep-output dict
-    per tick — INCLUDING failed ticks: a tick whose detectors failed
-    carries ``tick`` + ``statuses``; a tick whose sweep RAISED before
-    producing statuses carries ``tick`` + ``error`` + an empty
-    ``statuses`` dict (so callers may iterate ``statuses``
-    unconditionally), and outputs[i] always corresponds to tick i
-    and a caller pairing outputs with schedule times never
-    mis-attributes later ticks. The outer task is NON-retryable
-    (max_retries=0): the inner sweep already ran every detector
-    through the per-task healing protocol, and it has SIDE EFFECTS
-    (alert delivery, history/baseline appends) — re-running the
-    whole sweep on one failed detector would append duplicate
-    baseline rows and re-deliver alerts."""
-    import time as _time
-
+    Returns one sweep-output dict per tick, with ``outputs[i]["tick"]
+    == i`` on every path: a tick whose tasks failed carries their
+    ``statuses``; a tick whose sweep RAISED carries ``error`` and an
+    empty ``statuses`` dict, and the later ticks still run. A failed
+    tick is not re-run: the sweep has side effects (alert delivery,
+    history and baseline appends), so re-running it would deliver
+    alerts twice."""
     outputs: list[dict[str, Any]] = []
-
-    def sweep(s: SparkSession, ctx: dict[str, Any]):
-        tick = ctx.get("run_index", len(outputs))
+    ticks = itertools.count() if max_runs is None else range(max_runs)
+    for tick in ticks:
+        if tick and interval_s > 0:
+            sleep(interval_s)
         try:
-            out = run_monitoring_sweep(s, sf_dir, state_root=state_root,
+            out = run_monitoring_sweep(spark, sf_dir, state_root=state_root,
                                        alert_dir=alert_dir)
         except Exception as e:  # noqa: BLE001
-            # a tick whose sweep itself raises (e.g. filesystem error
-            # reading state_root) still occupies its slot, so
-            # outputs[i] == tick i holds on EVERY path, not just the
-            # statuses-failed one
-            outputs.append({"tick": tick, "statuses": {},
-                            "error": f"{type(e).__name__}: {e}"})
-            raise
+            out = {"statuses": {}, "error": f"{type(e).__name__}: {e}"}
         out["tick"] = tick
         outputs.append(out)
-        failed = {k: v for k, v in out["statuses"].items()
-                  if v != "SUCCESS"}
-        if failed:
-            raise RuntimeError(f"sweep tasks failed: {failed}")
-        return out
-
-    pipe = Pipeline("scheduled_monitoring",
-                    [Task("sweep", sweep, max_retries=0)])
-    pipe.run_every(spark, interval_s, max_runs=max_runs,
-                   sleep=sleep if sleep is not None else _time.sleep)
     return outputs
 
 
 def run_curation_job(spark: SparkSession, sf_dir: str, output_path: str,
-                     dup_rate_alert_e6: int = 200_000,
-                     rule_prefilter: bool = False) -> dict[str, Any]:
+                     dup_rate_alert_e6: int = 200_000) -> dict[str, Any]:
     """The training-data curation pipeline end to end, through the
     same self-healing runner as the reference DAG: quality filter →
     exact dedup → LSH near-dup candidates + verified drop → split →
@@ -357,30 +336,13 @@ def run_curation_job(spark: SparkSession, sf_dir: str, output_path: str,
     DataFrames (one logical plan per stage, no materialization
     between them except the sink), and a stage failure — including
     the engine's own loud scale guards — goes through
-    analyze → suggest → apply → retry."""
-    from selfhealingdatapipeline_gcp_spark.operators import (
-        dataprep, dedup, textanalysis)
+    analyze → apply → retry."""
+    from selfhealingdatapipeline_gcp_spark.operators import dataprep, dedup
 
     state: dict[str, Any] = {}
 
     def filter_stage(s: SparkSession, ctx: dict[str, Any]):
         docs = catalog.load(s, sf_dir, "documents")
-        if rule_prefilter:
-            # rule-based ADMISSION pass before the statistical
-            # filter: Gopher rule conjunction + zero PII hits — both
-            # scan-stage expressions, so the prefilter adds no
-            # shuffle; C4 is web-text-specific and stays opt-in via
-            # the operator registry rather than this job flag
-            from selfhealingdatapipeline_gcp_spark.operators import (
-                curation)
-            g = (curation.quality_gopher_rules(docs)
-                 .filter(F.col("gopher_pass")).select("doc_id"))
-            p = (dataprep.pii_redact(docs)
-                 .filter((F.col("n_email") + F.col("n_phone")
-                          + F.col("n_card")) == 0)
-                 .select("doc_id"))
-            docs = docs.join(g, "doc_id").join(p, "doc_id")
-            state["n_rule_admitted"] = docs.count()
         kept = (dataprep.quality_filter_pipeline(docs)
                 .filter(F.col("keep")).select("doc_id"))
         return docs.join(kept, "doc_id")
@@ -460,7 +422,7 @@ def run_curation_job(spark: SparkSession, sf_dir: str, output_path: str,
         Task("alerts", alert_on_dup_rate, depends_on=("dedup",)),
     ])
     results = pipe.run(spark)
-    out: dict[str, Any] = {
+    return {
         "statuses": {k: v.status for k, v in results.items()},
         "n_in": state.get("n_in"),
         "n_out": state.get("n_out"),
@@ -471,9 +433,6 @@ def run_curation_job(spark: SparkSession, sf_dir: str, output_path: str,
         "output_path": (results["sink"].result
                         if results["sink"].status == "SUCCESS" else None),
     }
-    if "n_rule_admitted" in state:
-        out["n_rule_admitted"] = state["n_rule_admitted"]
-    return out
 
 
 def main() -> None:

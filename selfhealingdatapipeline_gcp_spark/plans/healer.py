@@ -1,4 +1,4 @@
-"""Self-healing: error analysis → fix suggestion → fix application.
+"""Self-healing: error analysis → fix application → undo.
 
 Reference parity:
 - utils/vertex_ai_handler.py:5-87 ``analyze_error`` sends the Spark
@@ -12,14 +12,19 @@ Reference parity:
   objects: source-text patchers (the double-dot rewrite) AND Spark
   conf/plan-level remediations (repartition bump, broadcast-threshold
   drop, schema relax, plain retry) that a retrying pipeline can apply
-  between attempts.
+  between attempts. Each ``apply_fix`` record keeps what the fix
+  replaced, so ``undo_fixes`` can put the session back when the task
+  it healed ends: a fix never outlives its task, the way the
+  reference's fix dies with the per-run Dataproc cluster.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+
+from selfhealingdatapipeline_gcp_spark.functions import money
 
 
 @dataclass
@@ -27,7 +32,8 @@ class Fix:
     fix_type: str                      # CODE | CONFIG | RETRY | MANUAL
     root_cause: str
     suggested_fix: str
-    # conf changes a pipeline applies to the SparkSession before retry
+    # runtime (modifiable) conf changes a pipeline applies to the
+    # SparkSession before retry
     conf_changes: dict[str, str] = field(default_factory=dict)
     # regex → replacement applied to the job's source text (CODE fixes)
     code_sub: tuple[str, str] | None = None
@@ -40,15 +46,11 @@ class Fix:
 
 
 # Engine-level patch registry: process-global switches apply_fix can
-# flip between retry attempts. Kept tiny and explicit — every entry
-# must be idempotent and safe to leave on.
-def _patch_money_decimal() -> None:
-    from selfhealingdatapipeline_gcp_spark.functions import money
-    money.set_decimal_mode(True)
-
-
-_ENGINE_PATCHES: dict[str, Callable[[], None]] = {
-    "money_decimal_mode": _patch_money_decimal,
+# flip between retry attempts, each as (getter, setter, patched value);
+# undo_fixes hands the getter's earlier value back to the setter.
+_ENGINE_PATCHES: dict[str, tuple[Callable[[], object],
+                                 Callable[[object], None], object]] = {
+    "money_decimal_mode": (money.decimal_mode, money.set_decimal_mode, True),
 }
 
 
@@ -159,11 +161,14 @@ def _fix_disk(m: re.Match[str]) -> Fix:
 
 @_rule("kryo_buffer", r"KryoException.*Buffer overflow|spark\.kryoserializer\.buffer")
 def _fix_kryo(m: re.Match[str]) -> Fix:
+    # the buffer size is a core conf: a live session cannot change it
+    # (CANNOT_MODIFY_CONFIG), so the fix is a resubmit with a new conf
     return Fix(
-        fix_type="CONFIG",
+        fix_type="MANUAL",
         root_cause="serializer buffer too small for a large record",
-        suggested_fix="raise spark.kryoserializer.buffer.max",
-        conf_changes={"spark.kryoserializer.buffer.max": "512m"},
+        suggested_fix="resubmit the job with "
+                      "--conf spark.kryoserializer.buffer.max=512m",
+        retryable=False,
     )
 
 
@@ -407,11 +412,6 @@ def analyze_error(error_log: str) -> Fix:
     )
 
 
-def suggest_fix(fix: Fix) -> Fix:
-    """Identity passthrough (vertex_ai_handler.py:89-90)."""
-    return fix
-
-
 def apply_code_fix(source_text: str, fix: Fix) -> str:
     """Apply a CODE fix to job source text (auto_healer.py:92-120)."""
     if fix.code_sub is None:
@@ -491,12 +491,33 @@ def apply_fix(fix: Fix, spark=None, source_text: str | None = None,
         record["fixed_source"] = fixed
         record["applied"] = fixed != source_text
     elif fix.fix_type == "CONFIG" and spark is not None and fix.conf_changes:
+        # None: the key was unset
+        record["conf_before"] = {key: spark.conf.get(key, None)
+                                 for key in fix.conf_changes}
         record["conf_applied"] = apply_conf_fix(spark, fix)
         record["applied"] = True
     elif fix.fix_type == "RETRY":
         record["applied"] = True
     if fix.engine_patch is not None:
-        _ENGINE_PATCHES[fix.engine_patch]()
+        get, set_, value = _ENGINE_PATCHES[fix.engine_patch]
+        record["engine_before"] = get()
+        set_(value)
         record["engine_patch"] = fix.engine_patch
         record["applied"] = True
     return record
+
+
+def undo_fixes(spark, records: Sequence[dict[str, object]]) -> None:
+    """Undo what the ``apply_fix`` records changed, newest first, so
+    each conf key and engine switch ends at its value from before the
+    first record touched it; a conf key that was unset is unset
+    again."""
+    for record in reversed(records):
+        for key, before in record.get("conf_before", {}).items():
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
+        if "engine_patch" in record:
+            _, set_, _ = _ENGINE_PATCHES[record["engine_patch"]]
+            set_(record["engine_before"])

@@ -62,9 +62,9 @@ def read_alert_history(spark: SparkSession, root: str) -> DataFrame:
     too, so the first sweep suppresses nothing. Any other read failure
     (a corrupt file, a denied path) raises: an empty history would
     re-deliver every alert instead of surfacing the error. That holds
-    even after a healed corrupt-file failure turned on
-    ``spark.sql.files.ignoreCorruptFiles`` for the session: skipping
-    the bad file would read as "nothing persisted" too."""
+    even on the retry of a task whose corrupt-file heal turned on
+    ``spark.sql.files.ignoreCorruptFiles``: skipping the bad file
+    would read as "nothing persisted" too."""
     path = os.path.join(root, ALERTS_SUBDIR)
     cols = ("detector", "alert_key", "sent_ts")
     try:

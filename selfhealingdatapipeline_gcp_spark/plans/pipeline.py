@@ -7,14 +7,20 @@ on-failure callback that analyzes logs and patches the job. Here a
 ``Pipeline`` is a DAG of ``Task``s running against one SparkSession
 (cluster lifecycle is the resource manager's job on a real
 deployment); each task gets per-attempt retry with healing between
-attempts: analyze_error → suggest_fix → apply_fix (conf changes land
-on the session before the retry), mirroring
-dag/self_healing_pipeline.py:27-144 ``self_healing_callback``.
+attempts: analyze_error → apply_fix (conf changes land on the session
+before the retry), mirroring dag/self_healing_pipeline.py:27-144
+``self_healing_callback``.
+
+A heal is scoped to the task it heals. In the reference the fix dies
+with the per-run cluster; here, when a task exits, successful or not,
+the runner undoes every conf change and engine switch its heals made
+(``healer.undo_fixes``). So no later task or run inherits a fix, and
+``increase:`` growth never exceeds what one task's retries apply. A
+downstream task that hits the same failure heals itself.
 """
 
 from __future__ import annotations
 
-import time
 import traceback
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
@@ -31,13 +37,8 @@ class Task:
     fn: Callable[[SparkSession, dict[str, Any]], Any]
     depends_on: tuple[str, ...] = ()
     max_retries: int = 2
-    retry_backoff_s: float = 0.0       # keep 0 in tests; seconds on real runs
     # quality gate: called on the task result; raise to fail the task
     validate: Callable[[Any], None] | None = None
-    # opt-in plan preflight: when the task returns a (lazy) DataFrame,
-    # lint its physical plan for scale anti-patterns BEFORE validate
-    # or any downstream action executes it (plans/lint.py)
-    lint_plans: bool = False
 
 
 @dataclass
@@ -53,11 +54,9 @@ class TaskResult:
 class Pipeline:
     """Topologically-ordered task runner with self-healing retries."""
 
-    def __init__(self, name: str, tasks: Sequence[Task],
-                 on_fix: Callable[[str, healer.Fix], None] | None = None):
+    def __init__(self, name: str, tasks: Sequence[Task]):
         self.name = name
         self.tasks = list(tasks)
-        self.on_fix = on_fix
         names = [t.name for t in self.tasks]
         if len(set(names)) != len(names):
             raise ValueError("duplicate task names")
@@ -83,12 +82,13 @@ class Pipeline:
                 raise ValueError("dependency cycle in pipeline")
         return order
 
-    def run(self, spark: SparkSession,
-            context: dict[str, Any] | None = None) -> dict[str, TaskResult]:
+    def run(self, spark: SparkSession) -> dict[str, TaskResult]:
         """Run all tasks; downstream of a failure is SKIPPED. Each
         failure goes through the healing protocol before a retry —
-        non-retryable classifications stop the attempts early."""
-        context = dict(context or {})
+        non-retryable classifications stop the attempts early. A task's
+        context maps each task that has succeeded so far to its
+        result."""
+        context: dict[str, Any] = {}
         results: dict[str, TaskResult] = {}
         for task in self._topo_order():
             if any(results[d].status != "SUCCESS" for d in task.depends_on):
@@ -99,77 +99,26 @@ class Pipeline:
                 context[task.name] = results[task.name].result
         return results
 
-    def run_every(self, spark: SparkSession, interval_s: float,
-                  max_runs: int | None = None,
-                  context: dict[str, Any] | None = None,
-                  sleep: Callable[[float], None] = time.sleep,
-                  stop_when: Callable[[dict[str, TaskResult]], bool]
-                  | None = None) -> list[dict[str, TaskResult]]:
-        """Scheduled recurring execution — the reference runs its
-        monitoring DAG on a cron (``schedule_interval='0 17 * * *'``,
-        dag/financial_monitoring_complete.py:176) and its pipeline
-        hourly (dag/self_healing_pipeline.py:154-165). On a real
-        deployment the scheduler is external (cron/Airflow submits
-        one run); this surface is the in-process recurring shape:
-        run → sleep(interval_s) → run, every run with the full
-        per-task healing protocol. Cross-run alert suppression is NOT
-        in-memory state here — it rides the persisted alert-history
-        sink (plans/history.py), so a sweep that lands after a
-        restart still suppresses repeats, exactly like the
-        reference's BigQuery-backed history.
-
-        ``max_runs=None`` loops forever; tests inject a finite
-        ``max_runs`` and a recording ``sleep``. ``stop_when(results)``
-        returning True ends the loop after that run. Each run's
-        context carries ``run_index`` (0-based) and, from the second
-        run on, ``prev_statuses``."""
-        all_results: list[dict[str, TaskResult]] = []
-        i = 0
-        while max_runs is None or i < max_runs:
-            ctx = dict(context or {})
-            ctx["run_index"] = i
-            if all_results:
-                ctx["prev_statuses"] = {
-                    k: v.status for k, v in all_results[-1].items()}
-            results = self.run(spark, ctx)
-            all_results.append(results)
-            i += 1
-            if stop_when is not None and stop_when(results):
-                break
-            if (max_runs is None or i < max_runs) and interval_s > 0:
-                sleep(interval_s)
-        return all_results
-
     def _run_task(self, spark: SparkSession, task: Task,
                   context: dict[str, Any]) -> TaskResult:
         res = TaskResult(task.name, "FAILED")
-        for attempt in range(1, task.max_retries + 2):
-            res.attempts = attempt
-            try:
-                out = task.fn(spark, context)
-                if task.lint_plans:
-                    from pyspark.sql import DataFrame as _DF
-
-                    from selfhealingdatapipeline_gcp_spark.plans import lint
-                    if isinstance(out, _DF):
-                        lint.assert_plan_clean(out)
-                if task.validate is not None:
-                    task.validate(out)
-                res.status = "SUCCESS"
-                res.result = out
-                res.error = None
-                return res
-            except Exception:
-                err = traceback.format_exc()
-                res.error = err
-                # === self-healing protocol (reference callback) ===
-                fix = healer.suggest_fix(healer.analyze_error(err))
-                record = healer.apply_fix(fix, spark=spark)
-                res.fixes.append(record)
-                if self.on_fix is not None:
-                    self.on_fix(task.name, fix)
-                if not fix.retryable or attempt > task.max_retries:
-                    return res
-                if task.retry_backoff_s:
-                    time.sleep(task.retry_backoff_s * attempt)
+        try:
+            for attempt in range(1, task.max_retries + 2):
+                res.attempts = attempt
+                try:
+                    out = task.fn(spark, context)
+                    if task.validate is not None:
+                        task.validate(out)
+                except Exception:
+                    res.error = traceback.format_exc()
+                    # === self-healing protocol (reference callback) ===
+                    fix = healer.analyze_error(res.error)
+                    res.fixes.append(healer.apply_fix(fix, spark=spark))
+                    if not fix.retryable:
+                        break
+                else:
+                    res.status, res.result, res.error = "SUCCESS", out, None
+                    break
+        finally:
+            healer.undo_fixes(spark, res.fixes)
         return res

@@ -690,26 +690,6 @@ def test_sample_size_degenerate_source_needs_zero(spark):
         assert r.n_required == 0 and r.n_required_fpc == 0
 
 
-def test_curation_job_rule_prefilter(spark, tmp_path):
-    """run_curation_job(rule_prefilter=True) applies the Gopher
-    conjunction + PII-free admission BEFORE the statistical filter:
-    all stages stay green, the admitted count is recorded, and the
-    pipeline's n_in can only shrink vs the unfiltered run."""
-    from selfhealingdatapipeline_gcp_spark import jobs
-
-    base = jobs.run_curation_job(spark, "/root/testdata/sf0.001",
-                                 str(tmp_path / "c_base"))
-    ruled = jobs.run_curation_job(spark, "/root/testdata/sf0.001",
-                                  str(tmp_path / "c_ruled"),
-                                  rule_prefilter=True)
-    assert all(s == "SUCCESS" for s in ruled["statuses"].values()), ruled
-    assert "n_rule_admitted" in ruled
-    assert ruled["n_rule_admitted"] <= 500
-    assert ruled["n_in"] <= base["n_in"]
-    assert ruled["n_in"] == ruled["n_rule_admitted"] or \
-        ruled["n_in"] <= ruled["n_rule_admitted"]
-
-
 # ---------------------------------------------------------------------------
 # batch 8: unicode hygiene
 # ---------------------------------------------------------------------------

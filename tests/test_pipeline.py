@@ -73,15 +73,16 @@ def test_fix_script_file_object_store_is_gated(tmp_path):
 
 
 def test_apply_conf_fix_doubles_partitions(spark):
-    before = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     fix = healer.analyze_error("java.lang.OutOfMemoryError: GC overhead")
     applied = healer.apply_fix(fix, spark=spark)
-    after = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        assert applied["applied"] is True
-        assert after == before * 2
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(before))
+    after = int(spark.conf.get(key))
+    healer.undo_fixes(spark, [applied])
+    assert applied["applied"] is True
+    assert applied["conf_before"][key] == before
+    assert after == int(before) * 2
+    assert spark.conf.get(key) == before
 
 
 def test_pipeline_retries_transient_and_succeeds(spark):
@@ -105,14 +106,18 @@ def test_pipeline_heals_real_ansi_overflow_via_decimal_mode(spark):
     """Chaos test (VERDICT r5 #7): a REAL Spark ANSI overflow — not a
     fabricated message — raised inside a running pipeline task must
     drive the full detect → classify → engine-patch → retry cycle:
-    the healer flips money.set_decimal_mode(True) and the identical
-    task succeeds on the next attempt with the exact result."""
+    the healer flips money.set_decimal_mode(True), the identical task
+    succeeds on the next attempt with the exact result, and decimal
+    mode is off again once the task has ended."""
     from selfhealingdatapipeline_gcp_spark.functions import money
     from selfhealingdatapipeline_gcp_spark.operators import analytics
+
+    modes = []
 
     # sf30-shaped HHI input: one supplier with $4e9 of flow squares
     # past int64 in the Σd² accumulator
     def hhi_task(s, ctx):
+        modes.append(money.decimal_mode())
         li = s.createDataFrame([(1, 1.0e9)] * 4,
                                "l_suppkey int, l_extendedprice double")
         supp = s.createDataFrame([(1, 0)],
@@ -122,17 +127,123 @@ def test_pipeline_heals_real_ansi_overflow_via_decimal_mode(spark):
         return analytics.supplier_concentration_hhi(li, supp, nat).collect()
 
     assert not money.decimal_mode()
-    try:
-        p = Pipeline("chaos", [Task("hhi", hhi_task, max_retries=2)])
-        res = p.run(spark)["hhi"]
+    p = Pipeline("chaos", [Task("hhi", hhi_task, max_retries=2)])
+    res = p.run(spark)["hhi"]
+    assert res.status == "SUCCESS"
+    assert res.attempts == 2              # one genuine failure, one heal
+    assert modes == [False, True]          # the retry ran in decimal mode
+    assert not money.decimal_mode()        # and the heal ended with the task
+    assert res.fixes[0]["engine_patch"] == "money_decimal_mode"
+    assert "overflow" in res.fixes[0]["root_cause"].lower()
+    assert res.result[0].hhi == 1.0        # exact post-heal result
+
+
+OOM = "java.lang.OutOfMemoryError: Java heap space"
+OOM_KEYS = ("spark.sql.shuffle.partitions",
+            "spark.sql.files.maxPartitionBytes")
+
+
+def _fail_once(log, seen, keys):
+    """A task fn that raises ``log`` on its first attempt and records
+    the session's values of ``keys`` on every attempt."""
+    def fn(s, ctx):
+        seen.append({k: s.conf.get(k) for k in keys})
+        if len(seen) == 1:
+            raise RuntimeError(log)
+        return len(seen)
+    return fn
+
+
+def test_healed_oom_conf_is_undone_when_the_task_ends(spark):
+    before = {k: spark.conf.get(k) for k in OOM_KEYS}
+    seen = []
+    res = Pipeline("oom", [Task("t", _fail_once(OOM, seen, OOM_KEYS))]
+                   ).run(spark)["t"]
+    assert res.status == "SUCCESS" and res.attempts == 2
+    shuffle, max_bytes = OOM_KEYS
+    # the retry ran healed ...
+    assert int(seen[1][shuffle]) == 2 * int(before[shuffle])
+    assert seen[1][max_bytes] == str(64 * 1024 * 1024)
+    # ... and the task's exit put the session back
+    assert {k: spark.conf.get(k) for k in OOM_KEYS} == before
+
+
+def test_oom_heals_do_not_compound_across_runs(spark):
+    key = "spark.sql.shuffle.partitions"
+    start = int(spark.conf.get(key))
+    healed = []
+    for _ in range(3):
+        seen = []
+        res = Pipeline("oom", [Task("t", _fail_once(OOM, seen, (key,)))]
+                       ).run(spark)["t"]
         assert res.status == "SUCCESS"
-        assert res.attempts == 2          # one genuine failure, one heal
-        assert money.decimal_mode()        # the patch actually landed
-        assert res.fixes[0]["engine_patch"] == "money_decimal_mode"
-        assert "overflow" in res.fixes[0]["root_cause"].lower()
-        assert res.result[0].hhi == 1.0    # exact post-heal result
-    finally:
-        money.set_decimal_mode(False)
+        healed.append(int(seen[1][key]))
+    assert healed == [2 * start] * 3
+    assert int(spark.conf.get(key)) == start
+
+
+def test_oom_growth_is_capped_by_max_retries(spark):
+    """A task that keeps failing doubles the partitions once per retry,
+    and the session ends where it started."""
+    key = "spark.sql.shuffle.partitions"
+    start = int(spark.conf.get(key))
+    seen = []
+
+    def always_oom(s, ctx):
+        seen.append(int(s.conf.get(key)))
+        raise RuntimeError(OOM)
+
+    res = Pipeline("oom", [Task("t", always_oom, max_retries=2)]
+                   ).run(spark)["t"]
+    assert res.status == "FAILED" and res.attempts == 3
+    assert seen == [start, 2 * start, 4 * start]
+    assert int(spark.conf.get(key)) == start
+
+
+def test_healed_corrupt_file_turns_ignore_corrupt_files_off_again(spark):
+    key = "spark.sql.files.ignoreCorruptFiles"
+    assert spark.conf.get(key, None) is None      # unset: default false
+    seen = []
+    log = "org.apache.spark.SparkException: Could not read footer for file"
+    res = Pipeline("corrupt", [Task("t", _fail_once(log, seen, (key,)))]
+                   ).run(spark)["t"]
+    assert res.status == "SUCCESS"
+    assert [s[key] for s in seen] == ["false", "true"]
+    assert spark.conf.get(key, None) is None      # unset again
+
+
+KRYO = ("org.apache.spark.SparkException: Job aborted due to stage "
+        "failure: com.esotericsoftware.kryo.KryoException: Buffer "
+        "overflow. Available: 0, required: 134217728. To avoid this, "
+        "increase spark.kryoserializer.buffer.max value.")
+
+
+def test_kryo_overflow_fails_the_task_without_raising(spark):
+    """The Kryo buffer is a core conf that a live session cannot change,
+    so the heal is a manual resubmit: the task fails once and the
+    pipeline still returns its statuses."""
+    calls = []
+
+    def overflow(s, ctx):
+        calls.append(1)
+        raise RuntimeError(KRYO)
+
+    res = Pipeline("kryo", [Task("t", overflow, max_retries=2)]
+                   ).run(spark)["t"]
+    assert res.status == "FAILED" and len(calls) == 1
+    assert res.fixes[0]["fix_type"] == "MANUAL"
+    assert "spark.kryoserializer.buffer.max" in res.fixes[0]["suggested_fix"]
+
+
+def test_every_rule_conf_change_is_modifiable_at_runtime(spark):
+    """apply_fix sets conf_changes on the live session, which raises
+    CANNOT_MODIFY_CONFIG for a static or core conf."""
+    keys = set()
+    for _name, _pattern, build in healer._RULES:
+        keys |= set(build(None).conf_changes)
+    assert keys
+    assert {k: spark.conf.isModifiable(k) for k in keys} \
+        == dict.fromkeys(keys, True)
 
 
 def test_pipeline_nonretryable_stops_early(spark):
@@ -401,33 +512,34 @@ def test_sweep_persists_history_and_suppresses_repeats(spark, tmp_path):
     assert r.sample_size > 0 and r.min_value <= r.baseline_value <= r.max_value
 
 
-def test_run_every_schedules_and_paces(spark):
-    """Pipeline.run_every: N runs, injectable sleep between them (the
-    reference DAG's cron interval, in-process), run_index/prev_statuses
-    in context, stop_when early exit."""
-    from selfhealingdatapipeline_gcp_spark.plans.pipeline import (
-        Pipeline, Task)
+def test_scheduled_sweeps_keep_a_slot_for_a_raising_tick(monkeypatch):
+    """A tick whose sweep raises still fills outputs[i] with its tick
+    number, the error and empty statuses; later ticks still run, and
+    the loop sleeps between ticks only."""
+    from selfhealingdatapipeline_gcp_spark import jobs
 
-    seen = []
+    calls = []
+
+    def sweep(spark, sf_dir, state_root, alert_dir):
+        calls.append(len(calls))
+        if len(calls) == 2:
+            raise OSError("state_root unreadable")
+        return {"statuses": {"detectors": "SUCCESS"}}
+
+    monkeypatch.setattr(jobs, "run_monitoring_sweep", sweep)
     naps = []
-
-    def tick(s, ctx):
-        seen.append((ctx["run_index"], ctx.get("prev_statuses")))
-        return ctx["run_index"]
-
-    pipe = Pipeline("sched", [Task("tick", tick)])
-    runs = pipe.run_every(spark, interval_s=60.0, max_runs=3,
-                          sleep=naps.append)
-    assert len(runs) == 3
-    assert [r["tick"].result for r in runs] == [0, 1, 2]
-    # sleeps BETWEEN runs only (2 gaps for 3 runs), at the interval
+    outs = jobs.run_scheduled_sweeps(None, "sf", "state", interval_s=60.0,
+                                     max_runs=3, sleep=naps.append)
+    assert [o["tick"] for o in outs] == [0, 1, 2]
+    assert outs[1] == {"tick": 1, "statuses": {},
+                       "error": "OSError: state_root unreadable"}
+    assert outs[2]["statuses"] == {"detectors": "SUCCESS"}
     assert naps == [60.0, 60.0]
-    assert seen[0] == (0, None)
-    assert seen[1] == (1, {"tick": "SUCCESS"})
-    # stop_when ends the loop after the matching run
-    runs = pipe.run_every(spark, interval_s=0, max_runs=10,
-                          stop_when=lambda r: r["tick"].result >= 1)
-    assert len(runs) == 2
+    # interval_s=0: no sleep at all
+    naps.clear()
+    jobs.run_scheduled_sweeps(None, "sf", "state", interval_s=0,
+                              max_runs=2, sleep=naps.append)
+    assert naps == []
 
 
 def test_scheduled_sweeps_suppress_repeats_across_ticks(spark, tmp_path):
@@ -499,12 +611,11 @@ def test_corrupt_history_fails_send_alerts_and_delivers_nothing(
     _, results = _record_tasks(monkeypatch)
     key = "spark.sql.files.ignoreCorruptFiles"
     before = spark.conf.get(key)
-    try:
-        out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
-                                        state_root=str(root),
-                                        alert_dir=str(alert_dir))
-    finally:
-        spark.conf.set(key, before)
+    out = jobs.run_monitoring_sweep(spark, SF_SMOKE,
+                                    state_root=str(root),
+                                    alert_dir=str(alert_dir))
+    # every attempt's corrupt-file heal was undone with the task
+    assert spark.conf.get(key) == before
     assert out["statuses"]["send_alerts"] == "FAILED", out["statuses"]
     assert out["alerts"] is None
     send = next(r for r in results if r.name == "send_alerts")
@@ -516,7 +627,7 @@ def test_corrupt_history_fails_send_alerts_and_delivers_nothing(
 @pytest.mark.parametrize("log,expected_type,kw", [
     ("java.io.IOException: No space left on device", "CONFIG", "disk"),
     ("com.esotericsoftware.kryo.KryoException: Buffer overflow. Available: 0",
-     "CONFIG", "buffer"),
+     "MANUAL", "buffer"),
     ("java.lang.RuntimeException: file:/x.parquet is not a Parquet file",
      "CONFIG", "corrupt"),
     ("_pickle.PicklingError: Could not serialize object", "MANUAL",
@@ -1098,33 +1209,6 @@ def test_rocksdb_state_store_runs_stateful_query(spark, tmp_path):
     assert rocks == default and len(rocks) == 4
 
 
-def test_task_lint_preflight_blocks_cartesian(spark):
-    """A task that builds a cartesian plan with lint_plans=True must
-    fail BEFORE any action executes it; the same task without the
-    flag passes through (the preflight is opt-in)."""
-    def build_cartesian(s, ctx):
-        return s.range(5).crossJoin(
-            s.range(5).withColumnRenamed("id", "id2"))
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.crossJoin.enabled", "true")
-    # keep broadcast OFF through the lint call — planning is lazy, so
-    # the threshold must still be -1 when the preflight reads the plan
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        linted = Pipeline("lint_on", [
-            Task("cart", build_cartesian, max_retries=0,
-                 lint_plans=True)])
-        res = linted.run(spark)["cart"]
-        assert res.status == "FAILED" and "cartesian" in res.error
-
-        unlinted = Pipeline("lint_off", [
-            Task("cart", build_cartesian, max_retries=0)])
-        assert unlinted.run(spark)["cart"].status == "SUCCESS"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_scheduled_sweep_delivers_recommendations_once(spark, tmp_path):
     """The full reference parity path in one run (VERDICT r8 #7):
     detector fires → rule severity routes channels → the delivered
@@ -1348,37 +1432,49 @@ def test_warm_runs_reuse_generated_code(spark, tmp_path, job):
     assert compiled <= WARM_RUN_MAX_COMPILES, compiled
 
 
-def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
-    """A detector whose materialization fails on a pool thread fails the
-    detectors task, which heals and succeeds on its second attempt.
+def _fail_detector_once(monkeypatch, name, log):
+    """Make the first materialization of detector ``name`` raise ``log``.
     Materialization starts with ``observe`` (the row count rides the
-    checkpoint), so the failure is injected there."""
+    checkpoint), so the failure is injected there. Returns the list of
+    threads the failure was raised on."""
     import threading
 
-    from conftest import SF_SMOKE
-    from selfhealingdatapipeline_gcp_spark import jobs, registry
+    from selfhealingdatapipeline_gcp_spark import registry
 
     orig = registry.queries
     failed_on = []
 
     def queries():
         qs = orig()
-        build = qs["feed_status"]
+        build = qs[name]
 
         def flaky(s, sf_dir):
             df = build(s, sf_dir)
             if not failed_on:
                 def fail(*args, **kwargs):
                     failed_on.append(threading.current_thread())
-                    raise RuntimeError(
-                        "org.apache.spark.shuffle.FetchFailedException: "
-                        "Failed to connect to localhost/127.0.0.1:41234")
+                    raise RuntimeError(log)
                 df.observe = fail
             return df
-        qs["feed_status"] = flaky
+        qs[name] = flaky
         return qs
 
     monkeypatch.setattr(registry, "queries", queries)
+    return failed_on
+
+
+def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
+    """A detector whose materialization fails on a pool thread fails the
+    detectors task, which heals and succeeds on its second attempt."""
+    import threading
+
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    failed_on = _fail_detector_once(
+        monkeypatch, "feed_status",
+        "org.apache.spark.shuffle.FetchFailedException: "
+        "Failed to connect to localhost/127.0.0.1:41234")
     _, results = _record_tasks(monkeypatch)
     out = jobs.run_monitoring_sweep(spark, SF_SMOKE)
     assert out["statuses"] == {"detectors": "SUCCESS",
@@ -1390,6 +1486,27 @@ def test_sweep_detector_failure_in_pool_heals(spark, monkeypatch):
     assert det.attempts == 2
     assert det.fixes[0]["fix_type"] == "RETRY"
     assert "shuffle fetch" in det.fixes[0]["root_cause"]
+
+
+def test_scheduled_sweeps_survive_a_kryo_overflow(spark, tmp_path,
+                                                  monkeypatch):
+    """One detector failing with a Kryo buffer overflow fails that
+    tick's detectors task (a manual fix, not retried) and the scheduler
+    still returns all three ticks; the later ticks succeed."""
+    from conftest import SF_SMOKE
+    from selfhealingdatapipeline_gcp_spark import jobs
+
+    failed_on = _fail_detector_once(monkeypatch, "feed_status", KRYO)
+    outs = jobs.run_scheduled_sweeps(
+        spark, SF_SMOKE, str(tmp_path / "state"), interval_s=0,
+        max_runs=3)
+    assert [o["tick"] for o in outs] == [0, 1, 2]
+    assert outs[0]["statuses"] == {"detectors": "FAILED",
+                                   "send_alerts": "SKIPPED",
+                                   "daily_report": "SKIPPED"}
+    assert [set(o["statuses"].values()) for o in outs[1:]] \
+        == [{"SUCCESS"}] * 2
+    assert len(failed_on) == 1
 
 
 def test_sweep_jobs_inherit_callers_job_group(spark, tmp_path):
